@@ -47,62 +47,56 @@ object Politeness {
     * and `host_rank` (fetch rows: 1-based deterministic fetch position;
     * 0 otherwise). Input must carry `is_seen`; only !is_seen ∧ allowed rows
     * enter the salted two-phase rank (same exactness argument as budgetTopK).
+    *
+    * One linear chain — robots join → phase-1 window → phase-2 window →
+    * project — so no branch re-reads the input: the upstream dedup-flag
+    * subtree (scan + bloom UDF + confirm) is evaluated once without a
+    * checkpoint job, and the caller's cache of the result is the wave's
+    * single materialization. Closed rows (seen / blocked) ride the same
+    * windows in partitions of their own (`open` is a partition key) and
+    * ignore the window outputs.
     */
   def disposition(flagged: DataFrame, robots: DataFrame, waveDurationMs: Long,
                   saltBuckets: Int = 16): DataFrame = {
-    // localCheckpoint: four disposition branches (closed/under/over ×2 phases)
-    // would otherwise each re-evaluate the whole upstream dedup-flag subtree
-    // (scan + bloom UDF + confirm join) — measured ~4 recomputations of a
-    // 1M-row wave inside the rank+count phase. One materialization, lineage
-    // truncated, branches read blocks.
-    val joined = flagged.join(
+    val ord = Seq(col("priority"), col("depth"), col("discovery_ts"), col("url"))
+    val gated = flagged.join(
       broadcast(robots.select(col("host"), col("allowed"), col("crawl_delay_ms"))),
       Seq("host"), "left")
-      .withColumn("allowed", coalesce(col("allowed"), lit(true)))
-      .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(2000L)))
-      .withColumn("budget",
-        greatest(lit(1L), lit(waveDurationMs) / col("crawl_delay_ms")).cast("long"))
-      .localCheckpoint()
-
-    val closed = joined.filter(col("is_seen") || !col("allowed"))
-      .withColumn("disp", when(col("is_seen"), lit("seen")).otherwise(lit("blocked")))
-      .withColumn("host_rank", lit(0))
-    val open = joined.filter(!col("is_seen") && col("allowed"))
-
-    // Skew shield #1: hosts whose whole slice fits the budget skip ranking
-    // entirely (host_rank 0 — the trace orders those rows by their sort key,
-    // which is equivalent and partition-count independent). A per-host window
-    // here would funnel a hot host's slice through one task for no reason.
-    val hostCounts = open.groupBy(col("host")).agg(count(lit(1)).as("host_n"))
-    val withN = open.join(hostCounts, Seq("host"), "left")
-    val under = withN.filter(col("host_n") <= col("budget"))
-      .withColumn("disp", lit("fetch")).withColumn("host_rank", lit(0))
-      .drop("host_n")
-    val over = withN.filter(col("host_n") > col("budget")).drop("host_n")
-
-    // Skew shield #2 (over-budget hosts only): salted two-phase exact top-k —
-    // phase 1 keeps per-(host, salt) top-budget (superset of the global
-    // per-host top-budget), phase 2 ranks the ≤ salt·budget survivors.
-    val ord = Seq(col("priority"), col("depth"), col("discovery_ts"), col("url"))
-    val w1 = Window.partitionBy(col("host"), col("salt")).orderBy(ord: _*)
-    val phase1 = over
+      .withColumn("budget", greatest(lit(1L),
+        lit(waveDurationMs) / coalesce(col("crawl_delay_ms"), lit(2000L))).cast("long"))
+      .withColumn("open", !col("is_seen") && coalesce(col("allowed"), lit(true)))
       .withColumn("salt", pmod(xxhash64(col("url")), lit(saltBuckets)))
-      .withColumn("r1", row_number().over(w1))
-    val cut1 = phase1.filter(col("r1") > col("budget"))
-      .withColumn("disp", lit("deferred")).withColumn("host_rank", lit(0))
-    val w2 = Window.partitionBy(col("host")).orderBy(ord: _*)
-    val phase2 = phase1.filter(col("r1") <= col("budget"))
-      .withColumn("host_rank", row_number().over(w2))
-      .withColumn("disp",
-        when(col("host_rank") <= col("budget"), lit("fetch")).otherwise(lit("deferred")))
-      .withColumn("host_rank",
-        when(col("disp") === "fetch", col("host_rank")).otherwise(lit(0)))
 
-    phase2.drop("salt", "r1")
-      .unionByName(cut1.drop("salt", "r1"))
-      .unionByName(under)
-      .unionByName(closed)
-      .drop("allowed", "crawl_delay_ms", "budget", "is_seen")
+    // Skew shield (P8): phase 1 ranks within (host, salt) and keeps the
+    // per-salt top-(budget+1) — a superset of the per-host top-budget, so the
+    // survivors' phase-2 ranks ≤ budget are exact. Phase 2 ranks a host's
+    // ≤ salt·(budget+1) survivors in one partition (grp = -1) while cut rows
+    // stay spread by salt, so no window funnels a hot host's whole slice.
+    // The +1 also decides skew shield #1: a host's open slice fits its
+    // budget iff its survivors do (any cut salt alone leaves budget+1).
+    val w1 = Window.partitionBy(col("host"), col("salt"), col("open")).orderBy(ord: _*)
+    val w2 = Window.partitionBy(col("host"), col("grp"), col("open")).orderBy(ord: _*)
+    val ranked = gated
+      .withColumn("grp", when(col("open") && row_number().over(w1) <= col("budget") + 1,
+        lit(-1L)).otherwise(col("salt")))
+      .withColumn("r2", row_number().over(w2))
+      .withColumn("host_n", count(lit(1)).over(
+        w2.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    // hosts whose whole open slice fits the budget fetch unranked (host_rank
+    // 0 — the trace orders those rows by their sort key, which is equivalent
+    // and partition-count independent)
+    val ranks = col("grp") === -1 && col("host_n") > col("budget")
+    ranked
+      .withColumn("host_rank",
+        when(ranks && col("r2") <= col("budget"), col("r2")).otherwise(lit(0)))
+      .withColumn("disp",
+        when(col("is_seen"), lit("seen"))
+          .when(!col("open"), lit("blocked"))
+          .when(col("grp") =!= -1, lit("deferred"))
+          .when(!ranks || col("r2") <= col("budget"), lit("fetch"))
+          .otherwise(lit("deferred")))
+      .drop("allowed", "crawl_delay_ms", "budget", "is_seen", "open", "salt",
+        "grp", "r2", "host_n")
   }
 
   /** Split the deduped frontier into (fetchNow ranked per host, deferred to

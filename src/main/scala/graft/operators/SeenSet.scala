@@ -22,9 +22,9 @@ import graft.util.{CuckooChain, ShardState}
   *     final seen set equals the reference run's (dedup-on-request,
   *     first-wins). This is the default confirm tier.
   *  3. **Cuckoo confirm** — P partitioned cuckoo shards
-  *     (`pmod(url_hash, P)`), each merged per wave via a cogroup (shard blob
-  *     meets its wave inserts on the same reducer — never broadcast, never
-  *     driver-collected). O(1) memory probes instead of scanning the seen
+  *     (`pmod(url_hash, P)`), each merged per wave through one shard-ordered
+  *     exchange (shard blobs meet their wave inserts on the same reducer —
+  *     never broadcast, never driver-collected). O(1) memory probes instead of scanning the seen
   *     log; ~1.2e-4 false-positive rate per chain link (a false positive
   *     skips a fetch — see CrawlEngine.Config.strategy for the loss bound),
   *     no false negatives. The explicit opt-in tier for the 10^10-scale
@@ -77,12 +77,12 @@ object SeenSet {
     */
   final class Bloom(var expected: Long, fpp: Double) extends Serializable {
     /** null until the first wave merges — the filter is ADOPTED from the
-      * first distributed (`stat.bloomFilter`) build rather than pre-created:
-      * Spark 4's driver-side `BloomFilter.create` and the aggregate-built
-      * filter can disagree on hash-function count for non-power-of-two
-      * `expected` (`BloomFilterImplV2.checkCompatibilityForMerge` throws),
-      * so the engine only ever merges stat-built filters of identical
-      * (expected, fpp) into each other.
+      * first wave's [[WaveBloom]] build rather than pre-created with
+      * `BloomFilter.create(expected, fpp)`: that driver-side shape and the
+      * `stat.bloomFilter` aggregate's (which earlier stores persisted) can
+      * disagree on hash-function count for non-power-of-two `expected`
+      * (`BloomFilterImplV2.checkCompatibilityForMerge` throws), so every wave
+      * filter takes the aggregate's shape ([[Bloom.aggShape]]).
       */
     var filter: BloomFilter = null
     var inserted: Long = 0L
@@ -123,6 +123,17 @@ object SeenSet {
     val Magic: Long = 0x4752414654424C4DL
     val Version: Int = 1
 
+    /** (items, bits) of the filter `stat.bloomFilter(col, expected, fpp)`
+      * builds: `bloom_filter_agg` caps both by the session's runtime-filter
+      * limits. A filter of this shape is merge-compatible with every filter
+      * a store persisted from that aggregate.
+      */
+    def aggShape(spark: SparkSession, expected: Long, fpp: Double): (Long, Long) = {
+      def cap(key: String) = spark.conf.get(s"spark.sql.optimizer.runtime.bloomFilter.$key").toLong
+      (math.min(expected, cap("maxNumItems")),
+        math.min(BloomFilter.optimalNumOfBits(expected, fpp), cap("maxNumBits")))
+    }
+
     /** Load the newest persisted filter below `maxWaveExclusive` (replay
       * safety: a filter saved by a crashed attempt of the wave being replayed
       * is skipped — it would only add false positives, but the pre-crash
@@ -161,6 +172,55 @@ object SeenSet {
     }
   }
 
+  /** A wave's bloom insert as a side output of a job the wave already runs
+    * (the fetchlog write taps every attempted `url_hash` into it) — no job
+    * and no generated classes of its own. Each task keeps its hashes exactly
+    * until they would outweigh the filter's bits, then switches to a filter
+    * of [[Bloom.aggShape]], so the driver receives at most one filter's
+    * bytes per task and only 8 B per hash for small waves. Merging is a bit
+    * OR, hence idempotent: a retried or re-run task can only re-set bits
+    * that are set anyway, and the result equals the aggregate-built filter
+    * of the same hashes bit for bit.
+    */
+  final class WaveBloom(items: Long, bits: Long)
+      extends org.apache.spark.util.AccumulatorV2[Long, BloomFilter] {
+    private var keys = new Array[Long](0)
+    private var n = 0
+    private var filter: BloomFilter = null
+    private def toFilter(): BloomFilter = {
+      if (filter == null) filter = BloomFilter.create(items, bits)
+      var i = 0
+      while (i < n) { filter.putLong(keys(i)); i += 1 }
+      n = 0; keys = new Array[Long](0)
+      filter
+    }
+    override def isZero: Boolean = n == 0 && filter == null
+    override def copy(): WaveBloom = {
+      val c = new WaveBloom(items, bits)
+      c.merge(this)
+      c
+    }
+    override def reset(): Unit = { keys = new Array[Long](0); n = 0; filter = null }
+    override def add(h: Long): Unit =
+      if (filter != null) filter.putLong(h)
+      else {
+        if (n == keys.length) {
+          if (n.toLong * 64 >= bits) { toFilter().putLong(h); return }
+          keys = java.util.Arrays.copyOf(keys, math.max(16, n * 2))
+        }
+        keys(n) = h; n += 1
+      }
+    override def merge(other: org.apache.spark.util.AccumulatorV2[Long, BloomFilter]): Unit =
+      other match {
+        case o: WaveBloom =>
+          if (o.filter != null) toFilter().mergeInPlace(o.filter)
+          var i = 0
+          while (i < o.n) { add(o.keys(i)); i += 1 }
+      }
+    /** The wave filter (driver side, after the tapping job). */
+    override def value: BloomFilter = toFilter()
+  }
+
   // --- probe: candidates → fresh (not seen) ----------------------------------
   // `candidates` must carry `url_hash: Long`. Returns candidates minus seen.
 
@@ -171,19 +231,26 @@ object SeenSet {
 
   /** Bloom split: (definitely-new, suspects). No shuffle — a broadcast-udf
     * filter that prunes the confirm join's build side. An unbuilt filter
-    * (no wave merged yet) represents the empty set: everything is
-    * definitely-new, no broadcast at all.
+    * (no wave merged yet) represents the empty set and probes as a 1-item
+    * empty filter: everything is definitely-new, through the same plan as
+    * every later wave, so wave 0 compiles no classes of its own.
     */
   def bloomSplit(spark: SparkSession, candidates: DataFrame, bloom: Bloom)
       : (DataFrame, DataFrame) = {
-    if (bloom.isUnbuilt) return (candidates, candidates.limit(0))
-    val bc = spark.sparkContext.broadcast(bloom.filter)
-    val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-    (candidates.filter(!mightContain(col("url_hash"))),
-      candidates.filter(mightContain(col("url_hash"))))
+    val suspect = bloomSuspect(spark, bloom)
+    (candidates.filter(!suspect), candidates.filter(suspect))
   }
 
-  /** Tier 3: cuckoo-shard confirm via cogroup (shard-aligned, distributed). */
+  /** The bloom split's predicate: true for the candidates the confirm tier
+    * must check (`url_hash` might be seen).
+    */
+  def bloomSuspect(spark: SparkSession, bloom: Bloom): org.apache.spark.sql.Column = {
+    val bc = spark.sparkContext.broadcast(
+      if (bloom.isUnbuilt) BloomFilter.create(1) else bloom.filter)
+    udf((h: Long) => bc.value.mightContainLong(h)).apply(col("url_hash"))
+  }
+
+  /** Tier 3: cuckoo-shard confirm (shard-aligned, distributed). */
   def cuckooFresh(spark: SparkSession, candidates: DataFrame,
                   shardTable: SnapshotTable, shards: Int,
                   asOfWaveExclusive: Int = Int.MaxValue): DataFrame =
@@ -222,20 +289,49 @@ object SeenSet {
                           pruneBytes: Long): (Dataset[ShardBlob], Int) = {
     import spark.implicits._
     val v = shardTable.latestVersionBefore(waveExclusive)
-    val r: (Dataset[ShardBlob], Int) =
-      if (shardTable.isEmptyAt(v)) (spark.emptyDataset[ShardBlob], 0)
-      else {
-        val dirs =
-          if (shardTable.versionBytes(v.get) < pruneBytes) shardTable.versionDirs(v.get)
-          else shardTable.versionDirs(v.get, Some(wanted()))
-        if (dirs.isEmpty) (spark.emptyDataset[ShardBlob], 0)
-        else (spark.read.parquet(dirs: _*).as[ShardBlob], dirs.size)
-      }
-    lastBlobDirsRead = r._2
-    r
+    val dirs =
+      if (shardTable.isEmptyAt(v)) Nil
+      else if (shardTable.versionBytes(v.get) < pruneBytes) shardTable.versionDirs(v.get)
+      else shardTable.versionDirs(v.get, Some(wanted()))
+    lastBlobDirsRead = dirs.size
+    // no dirs still plans a (file-less) parquet scan, never an empty local
+    // relation the optimizer would prune: every wave then runs one plan
+    // shape, and so one set of generated classes
+    (spark.read.schema(org.apache.spark.sql.Encoders.product[ShardBlob].schema)
+      .parquet(dirs: _*).as[ShardBlob], dirs.size)
+  }
+
+  /** A shard-ordered stream of (shard, key, blob) rows: per shard, its
+    * prior `blobs` (key = null, so they sort first) and then its `keys`
+    * (`shard: int`, `h: long`) in ascending order. This is the one confirm-
+    * tier exchange: a codegen hash exchange of narrow UnsafeRows plus an
+    * in-partition sort, shared by the probe ([[cuckooFlagged]]) and the
+    * insert ([[cuckooInsert]]) so the two compile the same classes — the
+    * typed `groupByKey.cogroup` forms they replace each grouped wide
+    * objects outside codegen. Deterministic under task retry: the exchange
+    * keys and the sort are value-derived.
+    */
+  private def shardStream(spark: SparkSession, keys: DataFrame,
+                          blobs: Dataset[ShardBlob]): Dataset[(Int, java.lang.Long, Array[Byte])] = {
+    import spark.implicits._
+    keys.select(col("shard"), col("h"), lit(null).cast("binary").as("blob"))
+      .unionByName(blobs.toDF().select(col("shard"), lit(null).cast("long").as("h"), col("blob")))
+      .repartition(col("shard"))
+      .sortWithinPartitions("shard", "h")
+      .as[(Int, java.lang.Long, Array[Byte])]
   }
 
   /** Tier 3, flag form: every candidate row returned with `is_seen`.
+    *
+    * The probe streams each suspect shard's blobs ahead of its `suspect`
+    * candidates' hashes ([[shardStream]]), emits one verdict per suspect
+    * hash (seen = some blob contains it), and flags every candidate with a
+    * join on
+    * `url_hash` — so the candidates are scanned once for the flag, only the
+    * suspects' narrow keys reach the confirm exchange, and the wide rows
+    * never leave codegen. The verdicts are materialized eagerly (one job);
+    * the returned frame joins them lazily. A non-suspect is never seen (`suspect` must hold
+    * for every candidate that might be, e.g. a bloom pre-filter's verdict).
     *
     * `requireExact = true` (the [[BloomShardExact]] tier): the probe REJECTS
     * approximate (cuckoo-chain) base blobs instead of silently serving
@@ -247,48 +343,62 @@ object SeenSet {
                     shardTable: SnapshotTable, shards: Int,
                     asOfWaveExclusive: Int = Int.MaxValue,
                     pruneBytes: Long = DefaultPruneBytes,
-                    requireExact: Boolean = false): DataFrame = {
+                    requireExact: Boolean = false,
+                    suspect: org.apache.spark.sql.Column = lit(true)): DataFrame = {
     import spark.implicits._
-    val cands0 = candidates.withColumn("shard",
-      pmod(col("url_hash"), lit(shards)).cast("int"))
-    // when pruning will run its distinct-shards job, checkpoint the
-    // candidate subtree ONCE — otherwise the bloom-suspect filter (broadcast
-    // UDF over the frontier scan) would be evaluated twice, once for the
-    // shard set and once for the cogroup. Below the threshold the subtree
-    // is evaluated once anyway, so no checkpoint cost is paid at bench scale.
+    val keys0 = candidates.filter(suspect).select(
+      pmod(col("url_hash"), lit(shards)).cast("int").as("shard"), col("url_hash").as("h"))
+    // when pruning will run its distinct-shards job, checkpoint the suspect
+    // keys ONCE — otherwise the suspect filter (a broadcast UDF over the
+    // frontier scan) would be evaluated once more for the shard set. Below
+    // the threshold no checkpoint cost is paid.
     val v = shardTable.latestVersionBefore(asOfWaveExclusive)
     val willPrune = !shardTable.isEmptyAt(v) &&
       shardTable.versionBytes(v.get) >= pruneBytes
-    val cands = if (willPrune) cands0.localCheckpoint() else cands0
-    val withFlag = cands.withColumn("is_seen", lit(false))
-    val enc = org.apache.spark.sql.Encoders.row(withFlag.schema)
-    val shardIdx = withFlag.schema.fieldIndex("shard")
-    val hashIdx = withFlag.schema.fieldIndex("url_hash")
-    val flagIdx = withFlag.schema.fieldIndex("is_seen")
+    val keys = if (willPrune) keys0.localCheckpoint() else keys0
     val (blobs, _) = blobsBefore(spark, shardTable, asOfWaveExclusive,
-      () => cands.select("shard").distinct().collect().map(_.getInt(0)).toSet,
+      () => keys.select("shard").distinct().collect().map(_.getInt(0)).toSet,
       pruneBytes)
-    withFlag
-      .groupByKey(_.getInt(shardIdx))
-      .cogroup(blobs.groupByKey(_.shard)) { (shard, rows, blobIt) =>
+    val verdicts = shardStream(spark, keys, blobs)
+      .mapPartitions { rows =>
         // a shard owns one base + up to compactThreshold delta blobs
         // (LSM layout, see cuckooInsert); seen = any blob contains it
-        val states = blobIt.map(b => ShardState.deserialize(b.blob)).toSeq
-        if (requireExact && states.exists(_.isInstanceOf[ShardState.Base]))
-          throw new IllegalStateException(
-            s"shard $shard holds an approximate (cuckoo) base blob — this " +
-              "store was written with strategy=BloomCuckoo; the exact shard " +
-              "tier refuses to probe it (a chain FP would silently drop a " +
-              "never-seen url); continue with BloomCuckoo or start a fresh store")
-        if (states.isEmpty) rows
-        else rows.map { r =>
-          val h = r.getLong(hashIdx)
-          val vals = r.toSeq.toArray
-          vals(flagIdx) = states.exists(_.contains(h))
-          org.apache.spark.sql.Row.fromSeq(vals.toSeq)
+        var shard = Int.MinValue
+        var states: List[ShardState.Blob] = Nil
+        var last: java.lang.Long = null
+        rows.flatMap { case (sh, h, blob) =>
+          if (sh != shard) { shard = sh; states = Nil; last = null }
+          if (h == null) {
+            val st = ShardState.deserialize(blob)
+            if (requireExact && st.isInstanceOf[ShardState.Base])
+              throw new IllegalStateException(
+                s"shard $sh holds an approximate (cuckoo) base blob — this " +
+                  "store was written with strategy=BloomCuckoo; the exact shard " +
+                  "tier refuses to probe it (a chain FP would silently drop a " +
+                  "never-seen url); continue with BloomCuckoo or start a fresh store")
+            states ::= st
+            Iterator.empty
+          } else if (h == last) Iterator.empty
+          else { last = h; Iterator.single((h.longValue, states.exists(_.contains(h)))) }
         }
-      }(enc)
-      .drop("shard")
+      }
+      // one verdict per suspect hash, materialized by its own job: the
+      // caller's plan then holds a row scan of the verdicts in place of the
+      // probe's stages
+      .toDF("url_hash", "is_seen").localCheckpoint()
+    // plus a null-key row, joined null-safe: it matches no candidate (every
+    // url_hash is non-null) and, unlike a plain equi-join key, is not
+    // filtered out by inferred not-null constraints — so the build side is
+    // never empty, adaptive execution never drops the join, and every wave
+    // plans (and generates classes for) the same join, suspects or none
+    val withSentinel = verdicts.unionByName(spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(null, false)), verdicts.schema
+        .map(_.copy(nullable = true)).foldLeft(new org.apache.spark.sql.types.StructType())(_ add _)))
+      .withColumnRenamed("url_hash", "v_hash")
+    candidates
+      .join(withSentinel, candidates("url_hash") <=> withSentinel("v_hash"), "left")
+      .select((candidates.columns.map(candidates(_)) :+
+        coalesce(col("is_seen"), lit(false)).as("is_seen")): _*)
   }
 
   /** Default number of blobs a shard accumulates before compaction. */
@@ -302,11 +412,18 @@ object SeenSet {
     *    "rewrite only touched shards" fix alone still rewrites O(seen set)
     *    per wave in steady state; deltas make the per-wave write O(wave).)
     *  - A shard whose blob count has reached `compactThreshold` COMPACTS in
-    *    the same cogroup: its deltas' keys (retained exactly for this
+    *    the same pass: its deltas' keys (retained exactly for this
     *    purpose — cuckoo fingerprints alone cannot be rehashed into a
     *    bigger/merged filter) fold into the base [[CuckooChain]], its prior
     *    dirs are dropped from the manifest, amortizing O(seen/threshold)
     *    read+write per wave.
+    *
+    * Both run through one [[shardStream]] pass: only compacting shards
+    * contribute prior blobs (a pure-delta wave reads ZERO), and each shard's
+    * inserts arrive sorted, so a delta blob is its contiguous sorted run —
+    * byte-identical to `ShardState.serializeDelta` (SeenSetShardSpec) — and
+    * a compaction folds keys in a value-derived order, deterministic under
+    * task retry.
     *
     * Probe FP stays at the base chain's rate — deltas are exact. A base
     * outgrowing `perShardCapacity` chains a larger filter (logged) instead
@@ -324,52 +441,12 @@ object SeenSet {
     * — the analog of Iceberg's rewrite-data-files action, for running
     * off-crawl when delta accumulation should be reset.
     */
-  /** Pure-delta insert path (every wave whose shards are all under the
-    * compaction threshold — compactThreshold−1 of every compactThreshold
-    * waves): no prior blob is read, so the typed groupByKey.cogroup —
-    * object-grouped rows outside codegen — reduces to "sorted hashes per
-    * shard → one delta blob". This relational twin exchanges 16-byte
-    * UnsafeRows through a codegen hash exchange + in-partition sort and
-    * cuts each shard's blob from its contiguous sorted run. Blob BYTES are
-    * identical to the cogroup path's (`serializeDelta` sorts to the same
-    * array — asserted by SeenSetShardSpec), so stores, probes, digests and
-    * later compactions are unaffected. Deterministic under task retry: the
-    * exchange keys and the sort are value-derived (guide §2.5).
-    */
-  private def mergedPureDelta(spark: SparkSession, newHashes: Dataset[Long],
-                              shards: Int): Dataset[ShardBlob] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    newHashes.toDF("h")
-      .select(pmod(col("h"), lit(shards.toLong)).cast("int").as("shard"), col("h"))
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "h")
-      .as[(Int, Long)]
-      .mapPartitions { rows =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[ShardBlob]
-        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-        var cur = Int.MinValue
-        def flush(): Unit = if (cur != Int.MinValue) {
-          out += ShardBlob(cur, ShardState.serializeDeltaPresorted(buf.result()))
-          buf.clear()
-        }
-        rows.foreach { case (sh, h) =>
-          if (sh != cur) { flush(); cur = sh }
-          buf += h
-        }
-        flush()
-        out.iterator
-      }
-  }
-
   def cuckooInsert(spark: SparkSession, newHashes: Dataset[Long],
                    shardTable: SnapshotTable, shards: Int, perShardCapacity: Long,
                    wave: Int, pruneBytes: Long = DefaultPruneBytes,
                    compactThreshold: Int = DefaultCompactThreshold,
                    exactBase: Boolean = false): Unit = {
     import spark.implicits._
-    val byShard = newHashes.map(h => (((h % shards) + shards) % shards, h))
-      .toDF("shard", "h").as[(Long, Long)]
     // base = state strictly before this wave: a replayed insert after a
     // mid-wave crash merges into the same pre-crash base (idempotent commit)
     // instead of double-inserting into the crashed attempt's blobs. The
@@ -385,60 +462,24 @@ object SeenSet {
     // precomputed driver-side, so there is no planning job to amortize
     val (blobs, blobsRead) = blobsBefore(spark, shardTable, wave, () => compactIds,
       pruneBytes = 0L)
-    val merged: Dataset[ShardBlob] =
-      if (compactIds.isEmpty) mergedPureDelta(spark, newHashes, shards)
-      else byShard.groupByKey(_._1.toInt)
-      .cogroup(blobs.groupByKey(_.shard)) { (shard, ins, blobIt) =>
-        val insArr = ins.map(_._2).toArray
-        val states = blobIt.toSeq
-        if (states.nonEmpty && exactBase) {
-          // exact tier compaction: k-way merge-dedup every key (deltas retain
-          // them all, each blob already sorted) into ONE sorted primitive
-          // array — membership stays exact forever, at ~8 B/url vs the
-          // chain's ~2.3 B, and the merge allocates exactly the output (no
-          // boxing — VERDICT r04 wrong #2: an under-sharded store's
-          // compaction was GC churn). A chain base here means the store was
-          // written by the approximate tier: its keys are gone, so the tiers
-          // cannot be switched mid-store.
-          java.util.Arrays.sort(insArr)
-          val sortedInputs = states.map { b =>
-            ShardState.deserialize(b.blob) match {
-              case ShardState.Delta(hs) => hs
-              case ShardState.Base(_) => throw new IllegalStateException(
-                s"shard $shard holds an approximate (cuckoo) base blob — this " +
-                  "store was written with strategy=BloomCuckoo and cannot " +
-                  "resume under the exact shard tier (fingerprints have no " +
-                  "keys); continue with BloomCuckoo or start a fresh store")
-            }
-          }.toArray :+ insArr
-          Iterator.single(ShardBlob(shard, ShardState.serializeDeltaPresorted(
-            ShardState.mergeSortedDedup(sortedInputs))))
-        } else if (states.nonEmpty) {
-          // compacting shard: fold base + exact deltas + this wave into ONE chain
-          var grown = 0
-          var chain: CuckooChain = null
-          val deltaKeys = scala.collection.mutable.ArrayBuffer.empty[Long]
-          states.foreach { b =>
-            ShardState.deserialize(b.blob) match {
-              case ShardState.Base(c) =>
-                if (chain == null) chain = c
-                else throw new IllegalStateException(
-                  s"cuckoo shard $shard has two base blobs — corrupt manifest")
-              case ShardState.Delta(hs) => deltaKeys ++= hs
-            }
-          }
-          if (chain == null) chain = CuckooChain.create(perShardCapacity)
-          deltaKeys.foreach(h => grown += chain.insert(h))
-          insArr.foreach(h => grown += chain.insert(h))
-          if (grown > 0) System.err.println(
-            s"[graft] WARN cuckoo shard $shard base grew $grown time(s) to " +
-              s"chain length ${chain.length} (count=${chain.count}) — " +
-              s"perShardCapacity $perShardCapacity is under-sized; correct, " +
-              "but probe FP rate scales with chain length")
-          Iterator.single(ShardBlob(shard, chain.serialize()))
-        } else if (insArr.isEmpty) Iterator.empty // untouched: carried forward
-        else Iterator.single(ShardBlob(shard, ShardState.serializeDelta(insArr)))
+    val keys = newHashes.toDF("h")
+      .select(pmod(col("h"), lit(shards.toLong)).cast("int").as("shard"), col("h"))
+    val merged: Dataset[ShardBlob] = shardStream(spark, keys, blobs).mapPartitions { rows =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[ShardBlob]
+      val prior = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      val ins = new scala.collection.mutable.ArrayBuilder.ofLong
+      var cur = Int.MinValue
+      def flush(): Unit = if (cur != Int.MinValue) {
+        out += foldShard(cur, prior.toSeq, ins.result(), perShardCapacity, exactBase)
+        prior.clear(); ins.clear()
       }
+      rows.foreach { case (sh, h, blob) =>
+        if (sh != cur) { flush(); cur = sh }
+        if (h == null) prior += blob else ins += h.longValue
+      }
+      flush()
+      out.iterator
+    }
     // `blobs_read` rides the manifest: the cluster-portable record of the
     // pruned-I/O invariant (a pure delta wave reads 0 prior blobs, a
     // compaction wave reads only its compacting shards' blobs) — asserted
@@ -448,6 +489,58 @@ object SeenSet {
       metaKv = Map("blobs_read" -> blobsRead.toString,
         "compacted_shards" -> compactIds.size.toString))
   }
+
+  /** One shard's new blob from its prior blobs (non-empty only when it
+    * compacts) and this wave's inserts, ascending.
+    */
+  private def foldShard(shard: Int, prior: Seq[Array[Byte]], ins: Array[Long],
+                        perShardCapacity: Long, exactBase: Boolean): ShardBlob =
+    if (prior.isEmpty) ShardBlob(shard, ShardState.serializeDeltaPresorted(ins))
+    else if (exactBase) {
+      // exact tier compaction: k-way merge-dedup every key (deltas retain
+      // them all, each blob already sorted) into ONE sorted primitive
+      // array — membership stays exact forever, at ~8 B/url vs the
+      // chain's ~2.3 B, and the merge allocates exactly the output (no
+      // boxing — VERDICT r04 wrong #2: an under-sharded store's
+      // compaction was GC churn). A chain base here means the store was
+      // written by the approximate tier: its keys are gone, so the tiers
+      // cannot be switched mid-store.
+      val sortedInputs = prior.map { b =>
+        ShardState.deserialize(b) match {
+          case ShardState.Delta(hs) => hs
+          case ShardState.Base(_) => throw new IllegalStateException(
+            s"shard $shard holds an approximate (cuckoo) base blob — this " +
+              "store was written with strategy=BloomCuckoo and cannot " +
+              "resume under the exact shard tier (fingerprints have no " +
+              "keys); continue with BloomCuckoo or start a fresh store")
+        }
+      }.toArray :+ ins
+      ShardBlob(shard, ShardState.serializeDeltaPresorted(
+        ShardState.mergeSortedDedup(sortedInputs)))
+    } else {
+      // compacting shard: fold base + exact deltas + this wave into ONE chain
+      var grown = 0
+      var chain: CuckooChain = null
+      val deltaKeys = scala.collection.mutable.ArrayBuffer.empty[Long]
+      prior.foreach { b =>
+        ShardState.deserialize(b) match {
+          case ShardState.Base(c) =>
+            if (chain == null) chain = c
+            else throw new IllegalStateException(
+              s"cuckoo shard $shard has two base blobs — corrupt manifest")
+          case ShardState.Delta(hs) => deltaKeys ++= hs
+        }
+      }
+      if (chain == null) chain = CuckooChain.create(perShardCapacity)
+      deltaKeys.foreach(h => grown += chain.insert(h))
+      ins.foreach(h => grown += chain.insert(h))
+      if (grown > 0) System.err.println(
+        s"[graft] WARN cuckoo shard $shard base grew $grown time(s) to " +
+          s"chain length ${chain.length} (count=${chain.count}) — " +
+          s"perShardCapacity $perShardCapacity is under-sized; correct, " +
+          "but probe FP rate scales with chain length")
+      ShardBlob(shard, chain.serialize())
+    }
 
   /** Order-insensitive digest of a url set (SURVEY A9 / FIXTURES §4):
     * (count, bit_xor(xxhash64(url))) — equality proof vs the reference run.

@@ -156,7 +156,7 @@ class SeenSetShardSpec extends AnyFunSuite {
 
   test("pure-delta relational path writes byte-identical blobs to the " +
        "cogroup path (round-6: the codegen insert twin)") {
-    // the round-6 pure-delta fast path (SeenSet.mergedPureDelta) must cut
+    // the relational insert (SeenSet.cuckooInsert's shard stream) must cut
     // EXACTLY the blobs ShardState.serializeDelta produces per shard —
     // stores built by either engine version interoperate bit-for-bit
     val hashes = (0 until Shards).flatMap(hashesIn(_, 37)) ++ hashesIn(2, 90).drop(37)
