@@ -44,6 +44,12 @@ import graft.sources.PagesGen
   * manifest. The fit has little headroom: the cache's segments hash
   * entries per JVM, and at ~80 entries about one JVM in four overflows one.
   *
+  * Fault tolerance: the disposition and parse outputs are LOCAL checkpoints
+  * (blocks in executor memory, no lineage). An executor lost mid-wave takes
+  * its blocks with it and the wave fails instead of recomputing them; the
+  * crawl then resumes from the last committed wave (the atomic manifests
+  * above), so no state is lost, only the wave's work.
+  *
   * Determinism: no wall clock (discovery_ts := parent warc_ts), ordering
   * fully keyed by (priority, depth, discovery_ts, url) — identical traces
   * and digests at any parallelism (CrawlEngineSpec asserts local[8]-profile
@@ -254,15 +260,6 @@ object CrawlEngine {
       .when(href.startsWith("/"),
         concat(regexp_extract(base, "^(.*?//[^/]*|.[^/]*)", 1), href))
       .otherwise(concat(regexp_extract(base, "^(.*/)", 1), href))
-
-  /** Frees a local checkpoint's blocks now: `unpersist` does not reach
-    * them, and the context cleaner would wait for a GC of the driver objects
-    * that reference them.
-    */
-  private def release(ds: DataFrame): Unit = ds.queryExecution.logical.foreach {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
-  }
 
   /** A per-wave value as a column whose value lives in the expression's
     * references instead of the generated Java source: `lit(v)` inlines `v`
@@ -488,6 +485,9 @@ object CrawlEngine {
               sum(when(col("disp") === "fetch", 1L).otherwise(0L)).as("fetch"))
             .localCheckpoint()
         }
+        // the probe's verdicts checkpoint (in `flagged`'s plan) has no
+        // reader left once the disposition is materialized
+        SeenSet.releaseCheckpoints(flagged)
         val counts = obs.get
         def tally(k: String): Long = counts.get(k) match {
           case Some(x: java.lang.Number) => x.longValue()
@@ -503,7 +503,7 @@ object CrawlEngine {
         if (nCandidates == 0) {
           require(fplan.skippedRows == 0,
             "frontier planner bug: zero candidates read but rows skipped")
-          done = true; release(waveLog)
+          done = true; SeenSet.releaseCheckpoints(waveLog)
         }
         else {
           // ---- fetch (J5): wave ⋈ pages in the broadcast-legal inner shape
@@ -528,7 +528,7 @@ object CrawlEngine {
           // for the error-recovery short-circuit): it runs once per row in
           // the checkpoint job's result stage, whose accumulator updates
           // Spark applies once per task.
-          val okRows = spark.sparkContext.longAccumulator(s"graft-wave-$wave-ok")
+          val okRows = spark.sparkContext.longAccumulator
           val parse = udf((html: Array[Byte]) => {
             okRows.add(1L); QuestionParser.parsePage(html)
           })
@@ -556,7 +556,9 @@ object CrawlEngine {
           // url_hash passes the WaveBloom tap (attempted urls — Scrapy marks
           // on request). Past saturation the bits are dead and nothing taps.
           val waveBloom = new SeenSet.WaveBloom(bloomItems, bloomBits)
-          spark.sparkContext.register(waveBloom, s"graft-wave-$wave-bloom")
+          // unnamed: the scheduler calls a named accumulator's `value` for every
+          // task update (UI info), which would build a filter per task
+          spark.sparkContext.register(waveBloom)
           val bloomTap = udf((h: Long) => { waveBloom.add(h); h })
           val attemptCols = Seq(col("url"),
             (if (bloom.saturated) col("url_hash") else bloomTap(col("url_hash"))).as("url_hash"),
@@ -790,7 +792,7 @@ object CrawlEngine {
           if (sidecarOn) nf.unpersist()
           chunkCleanup() // releases rankChunks' range-sorted persist
 
-          release(okParsed); release(waveLog)
+          SeenSet.releaseCheckpoints(okParsed); SeenSet.releaseCheckpoints(waveLog)
           if (timing) System.err.println(
             f"[wave $wave] cand=$nCandidates fetch=$nFetch " +
               f"sec=${(System.nanoTime() - tw0) / 1e9}%.2f compiles=$compiles")

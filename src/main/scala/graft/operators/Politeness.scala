@@ -51,8 +51,8 @@ object Politeness {
     * One linear chain — robots join → phase-1 window → phase-2 window →
     * project — so no branch re-reads the input: the upstream dedup-flag
     * subtree (scan + bloom UDF + confirm) is evaluated once without a
-    * checkpoint job, and the caller's cache of the result is the wave's
-    * single materialization. Closed rows (seen / blocked) ride the same
+    * checkpoint job, and the caller's local checkpoint of the result is
+    * the wave's single materialization. Closed rows (seen / blocked) ride the same
     * windows in partitions of their own (`open` is a partition key) and
     * ignore the window outputs.
     */

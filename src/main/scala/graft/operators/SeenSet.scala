@@ -181,27 +181,39 @@ object SeenSet {
     * OR, hence idempotent: a retried or re-run task can only re-set bits
     * that are set anyway, and the result equals the aggregate-built filter
     * of the same hashes bit for bit.
+    *
+    * `value` and `isZero` may run on another thread while a task adds:
+    * executor heartbeats report a running task's accumulators, and in local
+    * mode the heartbeat reads the task's own object. So every member locks,
+    * and `value` only reads — it returns a fresh filter.
     */
   final class WaveBloom(items: Long, bits: Long)
       extends org.apache.spark.util.AccumulatorV2[Long, BloomFilter] {
     private var keys = new Array[Long](0)
     private var n = 0
     private var filter: BloomFilter = null
+    private def putKeys(f: BloomFilter): BloomFilter = {
+      var i = 0
+      while (i < n) { f.putLong(keys(i)); i += 1 }
+      f
+    }
+    /** Moves the exact keys into this accumulator's own filter. */
     private def toFilter(): BloomFilter = {
       if (filter == null) filter = BloomFilter.create(items, bits)
-      var i = 0
-      while (i < n) { filter.putLong(keys(i)); i += 1 }
+      putKeys(filter)
       n = 0; keys = new Array[Long](0)
       filter
     }
-    override def isZero: Boolean = n == 0 && filter == null
-    override def copy(): WaveBloom = {
+    override def isZero: Boolean = synchronized { n == 0 && filter == null }
+    override def copy(): WaveBloom = synchronized {
       val c = new WaveBloom(items, bits)
       c.merge(this)
       c
     }
-    override def reset(): Unit = { keys = new Array[Long](0); n = 0; filter = null }
-    override def add(h: Long): Unit =
+    override def reset(): Unit = synchronized {
+      keys = new Array[Long](0); n = 0; filter = null
+    }
+    override def add(h: Long): Unit = synchronized {
       if (filter != null) filter.putLong(h)
       else {
         if (n == keys.length) {
@@ -210,15 +222,25 @@ object SeenSet {
         }
         keys(n) = h; n += 1
       }
+    }
     override def merge(other: org.apache.spark.util.AccumulatorV2[Long, BloomFilter]): Unit =
       other match {
-        case o: WaveBloom =>
-          if (o.filter != null) toFilter().mergeInPlace(o.filter)
-          var i = 0
-          while (i < o.n) { add(o.keys(i)); i += 1 }
+        case o: WaveBloom => synchronized {
+          o.synchronized {
+            if (o.filter != null) toFilter().mergeInPlace(o.filter)
+            var i = 0
+            while (i < o.n) { add(o.keys(i)); i += 1 }
+          }
+        }
       }
-    /** The wave filter (driver side, after the tapping job). */
-    override def value: BloomFilter = toFilter()
+    /** The filter of every hash added so far, as a new object: this
+      * accumulator's state is left as it is.
+      */
+    override def value: BloomFilter = synchronized {
+      val f = BloomFilter.create(items, bits)
+      if (filter != null) f.mergeInPlace(filter)
+      putKeys(f)
+    }
   }
 
   // --- probe: candidates → fresh (not seen) ----------------------------------
@@ -249,6 +271,18 @@ object SeenSet {
       if (bloom.isUnbuilt) BloomFilter.create(1) else bloom.filter)
     udf((h: Long) => bc.value.mightContainLong(h)).apply(col("url_hash"))
   }
+
+  /** Frees the blocks of the local checkpoints in `ds`'s plan now:
+    * `unpersist` does not reach them, and the context cleaner would wait
+    * for a GC of the driver objects that reference them. Only for frames
+    * whose checkpoints have no reader left.
+    */
+  private[graft] def releaseCheckpoints(ds: DataFrame): Unit =
+    ds.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Tier 3: cuckoo-shard confirm (shard-aligned, distributed). */
   def cuckooFresh(spark: SparkSession, candidates: DataFrame,
@@ -386,6 +420,8 @@ object SeenSet {
       // caller's plan then holds a row scan of the verdicts in place of the
       // probe's stages
       .toDF("url_hash", "is_seen").localCheckpoint()
+    // the keys checkpoint is read only by the verdicts job and the shard set
+    if (willPrune) releaseCheckpoints(keys)
     // plus a null-key row, joined null-safe: it matches no candidate (every
     // url_hash is non-null) and, unlike a plain equi-join key, is not
     // filtered out by inferred not-null constraints — so the build side is

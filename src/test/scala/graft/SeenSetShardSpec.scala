@@ -332,4 +332,29 @@ class SeenSetShardSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] { SeenSet.Bloom.load(spark, dir) }
     assert(e.getMessage.contains("incompatible bloom snapshot"))
   }
+
+  test("wave bloom accumulator: value is a read-only snapshot — reads during " +
+       "adds (executor heartbeats) lose no hash and share no state") {
+    import org.apache.spark.util.sketch.BloomFilter
+    val items = 20000L
+    val bits = BloomFilter.optimalNumOfBits(items, 0.01)
+    val acc = new SeenSet.WaveBloom(items, bits)
+    // enough hashes that the task side switches from exact keys to a filter
+    val hs = (0 until items.toInt).map(i => graft.sources.PagesGen.mix(i.toLong))
+    @volatile var stop = false
+    val reader = new Thread(() => while (!stop) acc.value)
+    reader.start()
+    try hs.foreach(h => acc.add(h)) finally { stop = true; reader.join() }
+    // the driver merges the task's copy, as the scheduler does
+    val driver = new SeenSet.WaveBloom(items, bits)
+    driver.merge(acc)
+    val f = driver.value
+    assert(hs.forall(f.mightContainLong), "every added hash is in the wave filter")
+    // a snapshot is the caller's own object
+    val marker = Iterator.from(1).map(i => graft.sources.PagesGen.mix(-i.toLong))
+      .find(m => !acc.value.mightContainLong(m)).get
+    acc.value.putLong(marker)
+    assert(!acc.value.mightContainLong(marker))
+    assert(!driver.value.mightContainLong(marker))
+  }
 }
