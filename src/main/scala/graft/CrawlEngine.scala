@@ -46,9 +46,9 @@ import graft.sources.PagesGen
   *
   * Fault tolerance: the disposition and parse outputs are LOCAL checkpoints
   * (blocks in executor memory, no lineage). An executor lost mid-wave takes
-  * its blocks with it and the wave fails instead of recomputing them; the
-  * crawl then resumes from the last committed wave (the atomic manifests
-  * above), so no state is lost, only the wave's work.
+  * its blocks with it and the wave fails instead of recomputing them. No
+  * state is lost, only the wave's work: a re-run on the same store resumes
+  * from the last committed wave (the atomic manifests above).
   *
   * Determinism: no wall clock (discovery_ts := parent warc_ts), ordering
   * fully keyed by (priority, depth, discovery_ts, url) — identical traces

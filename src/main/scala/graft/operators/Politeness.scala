@@ -52,9 +52,9 @@ object Politeness {
     * project — so no branch re-reads the input: the upstream dedup-flag
     * subtree (scan + bloom UDF + confirm) is evaluated once without a
     * checkpoint job, and the caller's local checkpoint of the result is
-    * the wave's single materialization. Closed rows (seen / blocked) ride the same
-    * windows in partitions of their own (`open` is a partition key) and
-    * ignore the window outputs.
+    * the wave's single materialization. Closed rows (seen / blocked) ride
+    * the same windows in partitions of their own (`open` is a partition
+    * key) and ignore the window outputs.
     */
   def disposition(flagged: DataFrame, robots: DataFrame, waveDurationMs: Long,
                   saltBuckets: Int = 16): DataFrame = {
