@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.QuestionParser
 import graft.operators.{Frontier, Politeness, SeenSet}
-import graft.plans.SnapshotTable
+import graft.plans.{BucketedTable, SnapshotTable}
 import graft.sources.PagesGen
 
 /** The wave-loop crawl engine (SURVEY §2.8 P5, §3.1, §4 hot path).
@@ -18,7 +19,7 @@ import graft.sources.PagesGen
   *   frontier ──dedup flag (bloom → confirm)──┐
   *                                            ├─▶ waveLog(disp ∈ seen |
   *   robots ⋈ (broadcast) ── budget rank ─────┘    blocked | deferred | fetch)
-  *   fetch slice ⋈ pages (broadcast the wave — pages NEVER shuffle)
+  *   fetch slice ⋈ bucketed pages (sort-merge — pages NEVER shuffle)
   *     ──parse once──▶ questions ⊕ discovered links
   *   commits: fetchlog (doubles as the seen log + lineage source),
   *            questions, frontier' — atomic manifest renames → resumable.
@@ -55,12 +56,11 @@ import graft.sources.PagesGen
   * and digests at any parallelism (CrawlEngineSpec asserts local[8]-profile
   * vs local[32]-profile equality; Bench runs the real two-master protocol).
   *
-  * Scale notes (100 TB / 10^10 urls): pages NEVER shuffle. Preferred shape:
-  * a BUCKETED pages table (cfg.pagesTable, plans/BucketedTable) — sort-merge
-  * fetch join with zero exchange/sort on the pages side, only the small wave
-  * shuffles into the bucket layout. Fallback: broadcast the wave (inner join
-  * + left-anti error recovery — build-left on LEFT OUTER is illegal and
-  * silently drops the hint). The bloom tier is built distributed (executors
+  * Scale notes (100 TB / 10^10 urls): pages NEVER shuffle. The pages side
+  * is always a BUCKETED table (cfg.pagesTable, or one `run` stages under the
+  * store — plans/BucketedTable): the fetch join is a sort-merge join with
+  * zero exchange on the pages side, and only the small wave shuffles into
+  * the bucket layout. The bloom tier is built distributed (executors
   * fold partial filters; driver sees only the sketch). Dedup shuffles only
   * bloom-suspects. Politeness ranks via salted two-phase top-k (hot-host
   * skew, P8). All state tables are wave-partitioned for pruning. The
@@ -74,7 +74,6 @@ object CrawlEngine {
 
   final case class Config(
       waveDurationMs: Long = 60000L,
-      saltBuckets: Int = 16,
       // SIZING RULE: shards caps the confirm tier's parallelism (the insert/
       // probe shard stream runs ≤ shards tasks) AND divides the state for
       // pruned I/O — set shards ≈ cores at bench scale; at 10^10 set it ≥
@@ -91,13 +90,7 @@ object CrawlEngine {
       // exceed this; below it the extra distinct-shards planning job costs
       // more than reading everything
       cuckooPruneBytes: Long = SeenSet.DefaultPruneBytes,
-      // LSM compaction: a wave's inserts append as exact per-shard delta
-      // blobs (O(wave) write, zero read); a shard folds its deltas into its
-      // base cuckoo chain when it holds this many blobs. Probe cost per
-      // suspect ≤ 1 chain check + (threshold-1) binary searches.
-      cuckooCompactThreshold: Int = SeenSet.DefaultCompactThreshold,
       bloomExpected: Long = 1L << 22,
-      bloomFpp: Double = 0.01,
       // DEFAULT = BloomShardExact: EXACT confirm (reference dupefilter
       // semantics — a never-seen URL is NEVER dropped) over the LSM shard
       // store, so insert I/O is O(wave) and probes read only suspect
@@ -119,44 +112,23 @@ object CrawlEngine {
       maxWaves: Int = 64,
       parseQuestions: Boolean = true,
       amplify: Int = 1,
-      // wave rows broadcast-able for the fetch join. ~100 B/row → ~400 MB at
-      // the limit: a large but legal explicit broadcast, and RADICALLY
-      // cheaper than the alternative (hash-exchanging every html row of the
-      // pages table each wave — the 100-TB scale-killer). Waves beyond this
-      // take the shuffle join. Irrelevant when `pagesTable` is set.
-      // DRIVER-MEMORY CONTRACT (ADVICE r02): a wave at the limit holds
-      // ~400 MB on the driver, and the error-recovery anti-join can add a
-      // second ≤wave-sized broadcast in the same wave — budget ≥ 2× the
-      // limit's bytes of driver heap headroom. build.sbt pins -Xmx16g
-      // (SPARK_DRIVER_MEM overrides); lower heaps should lower this limit
-      // proportionally (rows × ~100 B × 2 ≤ heap/4 is a safe rule).
-      broadcastWaveLimit: Long = 4000000L,
-      pagesPath: Option[String] = None,
       // a catalog-registered BUCKETED pages table (bucketBy url, sorted, one
-      // file per bucket — see Bench.stagePagesBucketed): the fetch join then
-      // needs NO pages exchange, NO pages sort, and NO wave broadcast — only
-      // the (small) wave side shuffles, into the bucket layout. This is the
-      // 10^10-scale join shape (the north star's Iceberg-table analog).
+      // file per bucket — plans/BucketedTable): the fetch join needs NO
+      // pages exchange — only the (small) wave side shuffles, into the
+      // bucket layout (the north star's Iceberg-table analog). None: `run`
+      // stages the generated corpus that way under the store once and
+      // re-attaches it on later runs.
       // TABLE CONTRACT: urls must be UNIQUE (one page per url) — the fetch
       // join is INNER on url, so a duplicate url would double-fetch AND can
       // defeat the nOk==nFetch error-recovery short-circuit (ADVICE r02).
       // BucketedTable.write asserts this at staging time; rows with NULL
       // html are tolerated (routed to status='error', never parsed).
       pagesTable: Option[String] = None,
-      // one-time duplicate-url check when ATTACHING an externally staged
-      // plain-parquet pages dir (pagesPath): the bucketed path asserts at
-      // staging and the engine-generated path is unique by construction,
-      // but an external dir reaches the nOk==nFetch short-circuit unchecked
-      // without this (VERDICT r03 missing #3). One column-pruned agg at
-      // startup; opt out only for corpora already checked upstream.
-      assertPagesUnique: Boolean = true,
       // frontier LSM layout (operators/Frontier): cold dirs are keyed
-      // ((band·slices + tsSlice)·chunks + rankChunk)·shards + hostBucket;
-      // fresh discoveries live in shard -1. At 10^10 size shards ≈ the
-      // cluster's task fan-out and bands to the crawl's depth profile
-      // (band = min(priority, bands-1)).
+      // ((band·slices + tsSlice)·chunks + rankChunk)·shards + hostBucket
+      // (FrontierBands bands); fresh discoveries live in shard -1. At 10^10
+      // size shards ≈ the cluster's task fan-out.
       frontierShards: Int = 32,
-      frontierBands: Int = 8,
       // order-aligned slicing WITHIN a band (VERDICT r04 residual: the
       // ACTIVE band was one indivisible slab per host-bucket, rewritten
       // every wave). tsSlice = (discovery_ts epoch-sec / sliceSecs) mod
@@ -179,17 +151,16 @@ object CrawlEngine {
       // EXACT politeness rank (row_number over the full sort key — strictly
       // monotone, so chunk k's keys sort strictly below chunk k+1's and the
       // stats planner prunes tail chunks with no planner change) into
-      // GEOMETRIC tiers: chunk k covers ranks [budget·W·(2^k−1),
-      // budget·W·(2^(k+1)−1)) — LSM leveling, so chunks (16 by default)
-      // cover 65535·W·budget rows per host and a backlog row is rewritten
-      // O(log(backlog)) times total as it migrates toward the head tier,
-      // instead of once per wave. Engaged with the sidecar gate (chunk 0
-      // below it); the one-time cost is a per-host window over the rows the
-      // wave already rewrites — a giant single-host backlog funnels its one
-      // ranking sort through one task ONCE per influx, after which waves
-      // read only its head tier. frontierRankChunks=1 disables.
+      // GEOMETRIC tiers (W = FrontierChunkWaves): chunk k covers ranks
+      // [budget·W·(2^k−1), budget·W·(2^(k+1)−1)) — LSM leveling, so chunks
+      // (16 by default) cover 65535·W·budget rows per host and a backlog
+      // row is rewritten O(log(backlog)) times total as it migrates toward
+      // the head tier, instead of once per wave. Engaged with the sidecar
+      // gate (chunk 0 below it); the one-time cost is a per-host window over
+      // the rows the wave already rewrites — a giant single-host backlog
+      // funnels its one ranking sort through one task ONCE per influx, after
+      // which waves read only its head tier. frontierRankChunks=1 disables.
       frontierRankChunks: Int = 16,
-      frontierChunkWaves: Int = 4,
       // frontier read pruning + sidecar writes engage once the frontier's
       // manifest bytes pass this (sidecars at half of it, so stats exist by
       // the time pruning starts); below it every dir is read and the
@@ -206,30 +177,28 @@ object CrawlEngine {
       // cogroup, which pays one exchange of the cold bloom state. Identical
       // results on all three plans (FrontierSpec).
       frontierDupBroadcastBytes: Long = Frontier.DupProbeBroadcastBytes,
-      // discovery-count bound for the map-side regime above — same driver-
-      // memory contract as broadcastWaveLimit (~16 B/discovery collected)
+      // discovery-count bound for the map-side regime above — a driver-
+      // memory contract (~16 B/discovery collected)
       frontierDupDiscRows: Long = 4000000L,
       // sidecar fold threshold (Frontier.compactSidecar): stats/bloom tables
       // rewrite to live-rows-only once they hold this many dirs. Tests lower
       // it to force folds inside short crawls (the crash-replay-across-a-
       // fold repro); the default amortizes the fold to ~1/16 of the live
       // sidecar per wave.
-      frontierSidecarFoldDirs: Int = 16,
-      // in-memory columnar compression for the engine's columnar caches:
-      // the staged frontier and the rank-chunk persist of the sidecar path
-      // (the wave's disposition and parse outputs are local checkpoints —
-      // row blocks, never compressed). Spark's session default is ON; the
-      // crawl is CPU-bound and these caches are wave-scoped, so paying
-      // dictionary/RLE encode+decode per wave buys memory the wave doesn't
-      // need — compressing the parse output cost 9-17% of a whole crawl at
-      // bench scale (4M pages @32, 2 interleaved reps: compressed
-      // 146.0/127.1 s vs raw 121.1/118.5 s, digests identical). OFF by
-      // default. Scoped to run() — the session's prior setting is restored
-      // on exit.
-      cacheCompressed: Boolean = false)
+      frontierSidecarFoldDirs: Int = 16)
 
   final case class Result(waves: Int, fetched: Long, deduped: Long,
                           errors: Long, seenCount: Long, seenDigest: Long)
+
+  /** Bucket count of the pages table `run` stages when Config.pagesTable is
+    * None — also its fetch-join and parse fan-out.
+    */
+  private val StagedPagesBuckets: Int = 16
+  // fixed: persisted blooms carry the filter's shape and frontier dir keys
+  // the band and rank-tier layout, so runs on one store must agree on them
+  private val BloomFpp = 0.01
+  private val FrontierBands = 8 // band = min(priority, bands-1)
+  private val FrontierChunkWaves = 4 // W: rank tier 0 spans W waves of budget
 
   private def frontierCols = Seq("url", "url_hash", "host", "priority",
     "depth", "discovery_ts", "seed_subject", "seed_year")
@@ -269,46 +238,39 @@ object CrawlEngine {
   private def waveConst[T: scala.reflect.runtime.universe.TypeTag](v: T) =
     udf(() => v).asNonNullable()()
 
-  /** J5 fetch join, broadcast-legal shape: INNER join with the wave as the
-    * broadcast build side. Build-left on a LEFT OUTER join is unsupported —
-    * Spark silently drops the hint (`HintErrorLogger`) and shuffles pages,
-    * which at 10^10 urls is a full exchange of the big table every wave.
-    * Wave rows with no page are recovered separately by [[errorRows]].
-    * Big waves take the shuffle join instead: pushing 10^5+ rows through a
-    * driver broadcast is the wrong plan at any scale.
+  /** J5 fetch join: inner join on url against the bucketed pages table —
+    * sort-merge with zero exchange on the pages side (and zero sort when the
+    * session trusts per-bucket sort order); only the wave shuffles. NULL-html
+    * pages are dropped so the parse UDF never sees one; their urls are
+    * recovered as status='error' (ADVICE r02).
     */
-  private[graft] def joinWavePages(fetchSlice: DataFrame, pages: DataFrame,
-                                   useBroadcast: Boolean): DataFrame = {
-    // html IS NULL rows (legal for external tables) are excluded here so the
-    // parse UDF never sees a null payload; their urls then fall out of the
-    // ok-set and are recovered as status='error' by errorRows (ADVICE r02)
-    val p = pages.select(col("url"), col("warc_ts"), col("html"))
-      .filter(col("html").isNotNull)
-    if (useBroadcast) p.join(broadcast(fetchSlice), Seq("url"), "inner")
-    else fetchSlice.join(p, Seq("url"), "inner")
-  }
-
-  /** Fetch join against a BUCKETED pages table: plain inner join — the
-    * planner gives sort-merge with zero exchange and zero sort on the pages
-    * side (bucketed + per-bucket sorted); only the wave shuffles, into the
-    * bucket count. No broadcast build (the per-wave ~150 MB wave broadcast
-    * was a measured serial constant on the driver).
-    */
-  private[graft] def joinWaveBucketed(fetchSlice: DataFrame, pages: DataFrame): DataFrame =
+  private[graft] def joinWavePages(fetchSlice: DataFrame, pages: DataFrame): DataFrame =
     fetchSlice.join(pages.select(col("url"), col("warc_ts"), col("html"))
       .filter(col("html").isNotNull), Seq("url"), "inner")
 
-  /** Wave rows whose url had no page (status='error'): left-anti of the wave
-    * against the fetched urls. The anti side is ≤ the wave (broadcast-sized,
-    * and broadcasting the RIGHT side of a left-anti IS legal), so pages still
-    * never shuffle on the error-recovery path either.
+  /** Stage the generated corpus (stand-in for the live web / WARC store) as
+    * a bucketed table under the store — BucketedTable.write asserts url
+    * uniqueness — or re-attach the dir an earlier run on this store staged.
+    * Returns the catalog name, unique to the store; the files are external
+    * and outlive the catalog entry, which the caller drops.
     */
-  private[graft] def errorRows(fetchSlice: DataFrame, okUrls: DataFrame,
-                               useBroadcast: Boolean): DataFrame = {
-    val side = if (useBroadcast) broadcast(okUrls) else okUrls
-    fetchSlice.join(side, Seq("url"), "left_anti")
+  private def attachStagedPages(spark: SparkSession, sfDir: String,
+                                storeRoot: String, amplify: Int): String = {
+    val dir = s"$storeRoot/pages"
+    val table = "graft_pages_" + java.util.UUID.nameUUIDFromBytes(
+      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.replace("-", "")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(dir, "_SUCCESS")))
+      BucketedTable.register(spark, dir, table, BucketedTable.PagesDdl, "url",
+        StagedPagesBuckets)
+    else BucketedTable.write(PagesGen.pages(spark, sfDir, amplify).toDF(), dir,
+      table, "url", StagedPagesBuckets)
+    table
   }
 
+  /** Crawl to completion (or cfg.maxWaves) on the store, resuming from its
+    * last committed wave. Leaves the session's conf and catalog as found.
+    */
   def run(spark: SparkSession, sfDir: String, storeRoot: String,
           cfg: Config = Config()): Result = {
     import spark.implicits._
@@ -316,9 +278,9 @@ object CrawlEngine {
     // the shard itself is an int column, so the dim product must fit 2^31
     require(cfg.frontierTsSlices >= 1, "frontierTsSlices must be >= 1")
     require(cfg.frontierRankChunks >= 1, "frontierRankChunks must be >= 1")
-    require(cfg.frontierBands.toLong * cfg.frontierTsSlices *
+    require(FrontierBands.toLong * cfg.frontierTsSlices *
       cfg.frontierRankChunks * cfg.frontierShards < (1L << 31),
-      "frontierBands * frontierTsSlices * frontierRankChunks * " +
+      s"$FrontierBands bands * frontierTsSlices * frontierRankChunks * " +
         "frontierShards must stay under 2^31")
 
     val frontierT = new SnapshotTable(spark, storeRoot, "frontier")
@@ -329,32 +291,6 @@ object CrawlEngine {
     // planning) and url blooms (duplicate-vs-unread-dir probe)
     val fstatsT = new SnapshotTable(spark, storeRoot, "frontier_stats")
     val fbloomsT = new SnapshotTable(spark, storeRoot, "frontier_blooms")
-
-    // pages staged once (stand-in for the live web / WARC store); an
-    // externally staged path can be shared across runs (Bench does this so
-    // the timed region is pure crawl)
-    val pages = cfg.pagesTable match {
-      case Some(table) => spark.table(table)
-      case None =>
-        val pagesPath = cfg.pagesPath.getOrElse(s"$storeRoot/pages")
-        val pagesFs = new org.apache.hadoop.fs.Path(pagesPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!pagesFs.exists(new org.apache.hadoop.fs.Path(pagesPath, "_SUCCESS")))
-          PagesGen.pages(spark, sfDir, cfg.amplify).toDF()
-            .write.mode(SaveMode.Overwrite).parquet(pagesPath)
-        val df = spark.read.parquet(pagesPath)
-        // an EXTERNAL staged dir (pagesPath given) hasn't been through the
-        // BucketedTable.write staging assert, and the engine-generated dir
-        // is unique by construction — check only the external route
-        if (cfg.pagesPath.isDefined && cfg.assertPagesUnique)
-          graft.plans.BucketedTable.assertUniqueKey(df, "url",
-            s"external pages dir $pagesPath")
-        df
-    }
-    // scan fan-out is a property of the staged files — computed once, and
-    // only on the broadcast path that reads it (building the pages RDD is a
-    // planning pass of its own)
-    lazy val pagesScanParts = pages.rdd.getNumPartitions
 
     val robots = Politeness.robotsFixture(spark).toDF()
 
@@ -374,9 +310,9 @@ object CrawlEngine {
       0
     }
     val bloom = SeenSet.Bloom.load(spark, s"$storeRoot/bloom", startWave)
-      .map(_._2).getOrElse(new SeenSet.Bloom(cfg.bloomExpected, cfg.bloomFpp))
+      .map(_._2).getOrElse(new SeenSet.Bloom(cfg.bloomExpected, BloomFpp))
     val (bloomItems, bloomBits) =
-      SeenSet.Bloom.aggShape(spark, cfg.bloomExpected, cfg.bloomFpp)
+      SeenSet.Bloom.aggShape(spark, cfg.bloomExpected, BloomFpp)
 
     def seenLog(currentWave: Int): DataFrame =
       if (fetchlogT.isEmpty) spark.emptyDataset[Long].toDF("url_hash")
@@ -393,13 +329,13 @@ object CrawlEngine {
     val commitPool = java.util.concurrent.Executors.newFixedThreadPool(5,
       (r: Runnable) => { val t = new Thread(r, "graft-commit"); t.setDaemon(true); t })
     val commitEc = scala.concurrent.ExecutionContext.fromExecutorService(commitPool)
-    // wave-cache columnar compression (see Config.cacheCompressed): runtime
-    // SQL conf, read when each InMemoryRelation is built — set for the run,
-    // prior session value restored in the finally
-    val ccKey = "spark.sql.inMemoryColumnarStorage.compressed"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, cfg.cacheCompressed.toString)
+    // the staged table's catalog entry lives for this run only
+    var stagedTable: Option[String] = None
     try {
+    val pages = spark.table(cfg.pagesTable.getOrElse {
+      stagedTable = Some(attachStagedPages(spark, sfDir, storeRoot, cfg.amplify))
+      stagedTable.get
+    })
     while (!done && wave < cfg.maxWaves) {
       val tw0 = System.nanoTime()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -476,7 +412,7 @@ object CrawlEngine {
         val obs = org.apache.spark.sql.Observation(
           s"graft-wave-$wave-${System.nanoTime()}")
         val waveLog = phase("disposition", System.nanoTime()) {
-          Politeness.disposition(flagged, robots, cfg.waveDurationMs, cfg.saltBuckets)
+          Politeness.disposition(flagged, robots, cfg.waveDurationMs)
             .observe(obs,
               count(lit(1)).as("cand"),
               sum(when(col("disp") === "seen", 1L).otherwise(0L)).as("seen"),
@@ -506,22 +442,9 @@ object CrawlEngine {
           done = true; SeenSet.releaseCheckpoints(waveLog)
         }
         else {
-          // ---- fetch (J5): wave ⋈ pages in the broadcast-legal inner shape
-          // (joinWavePages) — pages NEVER shuffle on the broadcast path.
+          // ---- fetch (J5): wave ⋈ bucketed pages — pages NEVER shuffle
           val fetchSlice = waveLog.filter(col("disp") === "fetch")
             .select((frontierCols :+ "host_rank").map(col): _*)
-          val useBroadcast = cfg.pagesTable.isEmpty && nFetch <= cfg.broadcastWaveLimit
-          val joined0 =
-            if (cfg.pagesTable.isDefined) joinWaveBucketed(fetchSlice, pages)
-            else joinWavePages(fetchSlice, pages, useBroadcast)
-          // broadcast-join output inherits the pages scan's partitions —
-          // spread the parse ONLY when the scan genuinely under-splits
-          // (small staged corpora): when the scan already fans out ≥ the
-          // core count, this repartition would shuffle every html byte of
-          // the wave for nothing (measured: the dominant non-scaling cost
-          // per wave at bench scale)
-          val joined = if (useBroadcast && pagesScanParts < spark.sparkContext.defaultParallelism)
-            joined0.repartition(spark.sparkContext.defaultParallelism) else joined0
           // materialize the parse ONCE, as a local checkpoint (the parse UDF
           // runs here — the dominant, thread-scaling phase); every commit
           // below scans its blocks. The UDF counts the parsed rows (nOk,
@@ -533,7 +456,7 @@ object CrawlEngine {
             okRows.add(1L); QuestionParser.parsePage(html)
           })
           val okParsed = phase("parse", System.nanoTime()) {
-            joined
+            joinWavePages(fetchSlice, pages)
               .withColumn("status", lit("ok"))
               .withColumn("p", parse(col("html")))
               .drop("html")
@@ -544,11 +467,11 @@ object CrawlEngine {
           // status='error' recovery: wave rows with no page, or whose page
           // had NULL html (P6). Short-circuit: when every wave row parsed
           // (the common case — requires the pages table's url-uniqueness
-          // contract, see Config.pagesTable), skip the anti-join entirely —
-          // its build side is another wave-sized broadcast per wave.
+          // contract, see Config.pagesTable), skip the left-anti join of the
+          // wave against the parsed urls — a second pass over both per wave.
           val errRows = (if (nOk == nFetch)
             fetchSlice.limit(0)
-          else errorRows(fetchSlice, okParsed.select(col("url")), useBroadcast))
+          else fetchSlice.join(okParsed.select(col("url")), Seq("url"), "left_anti"))
             .withColumn("status", lit("error"))
 
           // ---- fetchlog rows: ordering trace + seen log + lineage source ----
@@ -624,7 +547,6 @@ object CrawlEngine {
                 SeenSet.cuckooInsert(spark, fetchSlice.select("url_hash").as[Long],
                   cuckooT, cfg.cuckooShards, cfg.cuckooPerShardCapacity, wave,
                   pruneBytes = cfg.cuckooPruneBytes,
-                  compactThreshold = cfg.cuckooCompactThreshold,
                   exactBase = cfg.strategy == SeenSet.BloomShardExact)
               })
           // ---- next frontier: deferred ∪ discovered links (S4), LSM ----
@@ -696,7 +618,7 @@ object CrawlEngine {
             if (!sidecarOn || cfg.frontierRankChunks <= 1)
               (deduped.withColumn("chunk", lit(0)), () => ())
             else Frontier.rankChunks(deduped, robots, cfg.waveDurationMs,
-              cfg.frontierChunkWaves, cfg.frontierRankChunks)
+              FrontierChunkWaves, cfg.frontierRankChunks)
           val nextFrontier = chunked
             // VETTED rows (probed this wave: open, host allowed — incl. a
             // merged rediscovery, whose url was just probed via its
@@ -705,7 +627,7 @@ object CrawlEngine {
             // discoveries go to the fresh dir, always read next wave so
             // seen-duplicates are consumed at first probe
             .withColumn("fshard", when(col("vetted") === 1,
-              (((least(col("priority"), lit(cfg.frontierBands - 1))
+              (((least(col("priority"), lit(FrontierBands - 1))
                 * cfg.frontierTsSlices + sliceCol)
                 * cfg.frontierRankChunks + col("chunk"))
                 * cfg.frontierShards
@@ -802,10 +724,7 @@ object CrawlEngine {
     }
     } finally {
       commitEc.shutdown()
-      ccPrev match {
-        case Some(v) => spark.conf.set(ccKey, v)
-        case None    => spark.conf.unset(ccKey)
-      }
+      stagedTable.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
 
     // ---- result summary from the fetchlog: ONE scan, one job ----

@@ -119,7 +119,7 @@ object Queries {
 
     // J5: fetch join — frontier ⋈ pages(store) on url; pages stand-in keyed
     // by the same arithmetic (broadcast of the smaller side is Catalyst's
-    // choice here; the engine broadcasts the wave, CrawlEngine.scala)
+    // choice here; the engine joins a bucketed pages table, CrawlEngine.scala)
     "j5_fetch_join" -> ((s, d) => {
       val f = frontierView(s, d).select(col("url"), col("host"), col("doc_id"))
       val pages = t(s, d, "documents").selectExpr("doc_id", "lang", "n_chars")

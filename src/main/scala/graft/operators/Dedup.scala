@@ -23,8 +23,8 @@ object Dedup {
     * input skew): a small single-file corpus arrives as ONE scan partition,
     * which serializes every downstream sketch UDF, band join and pair
     * verify into a single task. Only fires when the scan genuinely
-    * under-splits (same guard as the engine's parse spread) — at real scale
-    * the scan already fans out and this is a no-op, never a corpus shuffle.
+    * under-splits — at real scale the scan already fans out and this is a
+    * no-op, never a corpus shuffle.
     */
   private def spread(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext

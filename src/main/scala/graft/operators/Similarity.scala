@@ -29,8 +29,8 @@ object Similarity {
     * a small single-file embeddings table arrives as ONE scan partition,
     * which would serialize the streaming side of every bucket join — and
     * with it all the per-pair cosine evaluations — into a single task.
-    * Guarded like the engine's parse spread: a no-op whenever the scan
-    * already fans out (the real-scale case), never a corpus shuffle.
+    * A no-op whenever the scan already fans out (the real-scale case),
+    * never a corpus shuffle.
     */
   private def spread(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext

@@ -73,10 +73,7 @@ object CrawlOnce {
       parseQuestions = true,
       amplify = amplify,
       bloomExpected = math.max(1L << 22, amplify.toLong * 8192L),
-      pagesTable = Some("graft_pages"),
-      // GRAFT_CACHE_COMPRESSED=1 flips the wave-cache compression knob for
-      // same-build interleaved A/B of Config.cacheCompressed
-      cacheCompressed = sys.env.get("GRAFT_CACHE_COMPRESSED").contains("1"))
+      pagesTable = Some("graft_pages"))
     val t0 = System.nanoTime()
     val r = CrawlEngine.run(spark, sfDir, store, cfg)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -58,40 +58,6 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("LeftAnti"), plan)
   }
 
-  test("the crawl fetch join broadcasts the wave side, pages never shuffle") {
-    // auto-broadcast OFF: at sf0.001 AQE would happily broadcast the tiny
-    // pages side and mask an illegal wave-side hint (round-1 passed for that
-    // wrong reason while the engine's real plan shuffled pages). With the
-    // threshold at -1 only the EXPLICIT broadcast hint can produce a BHJ, so
-    // this asserts the hint is legal for the join type actually used.
-    import graft.sources.PagesGen
-    val store = java.nio.file.Files.createTempDirectory("graft-plan").toString
-    PagesGen.pages(spark, "/root/testdata/sf0.001").toDF()
-      .write.mode("overwrite").parquet(s"$store/pages")
-    val pages = spark.read.parquet(s"$store/pages")
-    val wave = CrawlEngine.seedFrontier(spark, "/root/testdata/sf0.001")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val okPlan = planOf(CrawlEngine.joinWavePages(wave, pages, useBroadcast = true)
-        .select(col("url"), col("warc_ts")))
-      assert(okPlan.contains("BroadcastHashJoin"), s"wave hint dropped:\n$okPlan")
-      assert(!okPlan.contains("Exchange hashpartitioning(url"),
-        s"pages shuffled:\n$okPlan")
-      assert(!okPlan.contains("SortMergeJoin"), s"fetch join degraded:\n$okPlan")
-
-      // error recovery: left-anti with the (small) ok-url set broadcast as
-      // the build side — legal, so pages never shuffle on this path either
-      val okUrls = CrawlEngine.joinWavePages(wave, pages, useBroadcast = true)
-        .select(col("url"))
-      val errPlan = planOf(CrawlEngine.errorRows(wave, okUrls, useBroadcast = true))
-      assert(errPlan.contains("BroadcastHashJoin"), s"anti hint dropped:\n$errPlan")
-      assert(errPlan.contains("LeftAnti"), errPlan)
-      assert(!errPlan.contains("Exchange hashpartitioning(url"),
-        s"error path shuffled on url:\n$errPlan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("bucketed fetch join: pages side has zero exchange and zero sort") {
     import graft.plans.BucketedTable
     import graft.sources.PagesGen
@@ -108,7 +74,7 @@ class PlanSpec extends AnyFunSuite {
     // file listing cost); the engine's bench sessions turn this on
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try {
-      val full = planOf(CrawlEngine.joinWaveBucketed(wave, spark.table("graft_pages_plan"))
+      val full = planOf(CrawlEngine.joinWavePages(wave, spark.table("graft_pages_plan"))
         .select(col("url"), col("warc_ts")))
       // AQE renders final + initial plans — assert on the final one only
       val plan = full.split("== Initial Plan ==").head
