@@ -3,7 +3,6 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.QuestionParser
@@ -19,7 +18,7 @@ import graft.sources.PagesGen
   *   frontier ──dedup flag (bloom → confirm)──┐
   *                                            ├─▶ waveLog(disp ∈ seen |
   *   robots ⋈ (broadcast) ── budget rank ─────┘    blocked | deferred | fetch)
-  *   fetch slice ⋈ bucketed pages (sort-merge — pages NEVER shuffle)
+  *   fetch slice ⋈ bucketed pages (broadcast or sort-merge, see below)
   *     ──parse once──▶ questions ⊕ discovered links
   *   commits: fetchlog (doubles as the seen log + lineage source),
   *            questions, frontier' — atomic manifest renames → resumable.
@@ -30,20 +29,25 @@ import graft.sources.PagesGen
   * adaptive execution every shuffle stage also runs as a job of its own:
   * 16 jobs per wave measured on the crawl-bulk benchmark (traced run).
   *
-  * Design constraint — the generated-class budget: a wave's plans generate
-  * ~60 distinct classes (~80 cache entries, since in local mode whole-stage
-  * classes compile once for the driver and once for the executor class
-  * loader), and that working set must stay inside Spark's codegen cache
-  * (`spark.sql.codegen.cache.maxEntries`, default 100: a 4-segment LRU of 25
-  * entries each). Past it every wave recompiles its own classes with Janino
-  * and re-JITs them — on crawl-bulk that was ~125 compiles and most of the
-  * per-wave CPU. So every wave plans the same shapes (per-wave values ride
-  * as data, not literals; empty inputs still plan as scans) and readers
-  * share shapes (one shard-stream exchange for probe and insert, row scans
-  * of checkpoints instead of per-column-set cache iterators). Each wave
-  * records its Janino compiles as `codegen_compiles` in the frontier
-  * manifest. The fit has little headroom: the cache's segments hash
-  * entries per JVM, and at ~80 entries about one JVM in four overflows one.
+  * Design constraint — the generated-class budget: a steady wave's plans
+  * generate 41 distinct classes, 58 cache entries (in local mode whole-
+  * stage classes compile once for the driver and once for the executor
+  * class loader; crawl-bulk benchmark, codegen cache of 1 entry so every
+  * use compiles), and that working set must stay inside Spark's codegen
+  * cache (`spark.sql.codegen.cache.maxEntries`, default 100: a 4-segment
+  * LRU of 25 entries each, the segment picked by a hash that mixes in the
+  * class loader's identity, so the fit differs per JVM). Past it every
+  * wave recompiles its own classes with Janino and re-JITs them. So every
+  * wave plans the same shapes (per-wave values ride as data, not literals;
+  * empty inputs still plan as scans), readers share shapes (one shard-
+  * stream exchange for probe and insert, row scans of checkpoints), and
+  * the per-row passes the engine writes itself — the disposition's two
+  * rank passes, the frontier dedup, the probe's verdicts and the insert's
+  * blob fold — run over `InternalRow`s with interpreted writers
+  * ([[graft.plans.RowPass]]): no window operator, no encoder, no class of
+  * their own. Each wave records its Janino compiles as `codegen_compiles`
+  * in the frontier manifest; CrawlEngineSpec asserts a repeat crawl's
+  * waves ≥ 1 compile at most 2.
   *
   * Fault tolerance: the disposition and parse outputs are LOCAL checkpoints
   * (blocks in executor memory, no lineage). An executor lost mid-wave takes
@@ -56,12 +60,18 @@ import graft.sources.PagesGen
   * and digests at any parallelism (CrawlEngineSpec asserts local[8]-profile
   * vs local[32]-profile equality; Bench runs the real two-master protocol).
   *
-  * Scale notes (100 TB / 10^10 urls): pages NEVER shuffle. The pages side
-  * is always a BUCKETED table (cfg.pagesTable, or one `run` stages under the
-  * store — plans/BucketedTable): the fetch join is a sort-merge join with
-  * zero exchange on the pages side, and only the small wave shuffles into
-  * the bucket layout. The bloom tier is built distributed (executors
-  * fold partial filters; driver sees only the sketch). Dedup shuffles only
+  * Fetch join: the pages side is always a BUCKETED table (cfg.pagesTable,
+  * or one `run` stages under the store — plans/BucketedTable), and the
+  * planner picks the join from the pages estimate. Under the broadcast
+  * threshold it is a BroadcastHashJoin BuildRight: at crawl-bulk scale the
+  * 8,000-row pages table (16.2 MiB) is scanned by 16 tasks, collected and
+  * broadcast in every wave, and the whole parse runs in one task. Above
+  * it (the 100 TB / 10^10-url case) it is a sort-merge join with zero
+  * exchange on the pages side — pages never shuffle; only the small wave
+  * shuffles into the bucket layout.
+  *
+  * Scale notes: the bloom tier is built distributed (executors fold
+  * partial filters; driver sees only the sketch). Dedup shuffles only
   * bloom-suspects. Politeness ranks via salted two-phase top-k (hot-host
   * skew, P8). All state tables are wave-partitioned for pruning. The
   * frontier itself is a dir-granular LSM priority queue
@@ -590,20 +600,13 @@ object CrawlEngine {
             if (!sidecarOn || cfg.frontierTsSlices <= 1) lit(0)
             else pmod(floor(unix_timestamp(col("discovery_ts"))
               / cfg.frontierTsSliceSecs), lit(cfg.frontierTsSlices)).cast("int")
-          // in-batch dedup: per url the deterministic min (priority, depth,
-          // discovery_ts, seed_subject, seed_year) row (host is a function
-          // of url), vetted if any copy survived. One exchange and one sort
-          // feed a window; a min(struct) aggregate would plan as a two-sort
-          // SortAggregate (struct buffers rule out hash aggregation).
-          val byUrl = Window.partitionBy("url", "url_hash").orderBy(
-            "priority", "depth", "discovery_ts", "seed_subject", "seed_year")
-          val deduped = survived.withColumn("is_surv", lit(1))
-            .unionByName(discovered.withColumn("is_surv", lit(0)))
-            .withColumn("rn", row_number().over(byUrl))
-            .withColumn("vetted", max(col("is_surv")).over(
-              byUrl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-            .filter(col("rn") === 1)
-            .drop("rn", "is_surv")
+          // in-batch dedup (Frontier.dedupByUrl): per url the min-key row,
+          // vetted if any copy survived. Planning its pass runs its exchange
+          // (see RowPass), so the next frontier is built inside the
+          // frontier-stage commit below, concurrent with the other commits.
+          lazy val deduped = Frontier.dedupByUrl(
+            survived.withColumn("is_surv", lit(1))
+              .unionByName(discovered.withColumn("is_surv", lit(0))))
           // geometric rank tier (Config.frontierRankChunks): exact per-host
           // rank over the full politeness key — strictly monotone (url
           // tiebreak), so chunk k's keys sort strictly below chunk k+1's
@@ -614,12 +617,12 @@ object CrawlEngine {
           // NOT Window.partitionBy(host), which would sort a mega-host's
           // whole read-back backlog in one task (e.g. a compaction wave
           // folding its tail tier).
-          val (chunked, chunkCleanup) =
+          lazy val (chunked, chunkCleanup) =
             if (!sidecarOn || cfg.frontierRankChunks <= 1)
               (deduped.withColumn("chunk", lit(0)), () => ())
             else Frontier.rankChunks(deduped, robots, cfg.waveDurationMs,
               FrontierChunkWaves, cfg.frontierRankChunks)
-          val nextFrontier = chunked
+          lazy val nextFrontier = chunked
             // VETTED rows (probed this wave: open, host allowed — incl. a
             // merged rediscovery, whose url was just probed via its
             // surviving copy) go to cold dirs keyed
@@ -635,7 +638,7 @@ object CrawlEngine {
                 .cast("int"))
               .otherwise(lit(Frontier.FreshShard)))
             .drop("chunk")
-          val nf = if (sidecarOn) nextFrontier.cache() else nextFrontier
+          lazy val nf = if (sidecarOn) nextFrontier.cache() else nextFrontier
           // commit unconditionally — no emptiness-probe count() job: an empty
           // frontier just makes the next iteration's candidate count 0, which
           // ends the loop (one cheap empty pass instead of a per-wave job).
@@ -663,7 +666,7 @@ object CrawlEngine {
             .map(p => Frontier.dirKey(SnapshotTable.waveOf(p).get,
               SnapshotTable.shardIdOf(p).get)).toSet
           val sidecarCommits: Seq[() => Unit] = if (!sidecarOn) Nil else {
-            val vetted = nf.filter(col("fshard") =!= Frontier.FreshShard)
+            lazy val vetted = nf.filter(col("fshard") =!= Frontier.FreshShard)
             Seq(
               () => phase("frontier-stats", System.nanoTime()) {
                 fstatsT.commit(Frontier.statsFor(vetted, wave + 1), wave + 1)

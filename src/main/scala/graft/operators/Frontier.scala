@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.plans.SnapshotTable
+import graft.plans.{RowPass, SnapshotTable}
 
 /** Frontier-as-priority-queue storage planning (north rule: "a priority
   * queue realized as an Iceberg-backed frontier table"; VERDICT r04 wrong #1
@@ -510,6 +513,45 @@ object Frontier {
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
     (ranked, () => { sorted.unpersist(); () })
+  }
+
+  /** In-batch frontier dedup: per url, the deterministic min (priority,
+    * depth, discovery_ts, seed_subject, seed_year) row of `rows` (host is a
+    * function of url), with `vetted` = 1 if any copy survived (`is_surv`,
+    * which is dropped). One exchange and one sort feed a pass that keeps
+    * each url group's first row ([[graft.plans.RowPass]]): no window
+    * operator and no min(struct) aggregate, which would plan as a two-sort
+    * SortAggregate (struct buffers rule out hash aggregation).
+    */
+  private[graft] def dedupByUrl(rows: DataFrame): DataFrame = {
+    val in = rows.repartition(col("url"), col("url_hash"))
+      .sortWithinPartitions("url", "url_hash", "priority", "depth", "discovery_ts",
+        "seed_subject", "seed_year")
+    val out = new RowPass.Out(in.schema, in.columns.toSeq.filter(_ != "is_surv"),
+      StructType(Seq(StructField("vetted", IntegerType, nullable = false))))
+    val key = new RowPass.GroupKey(in.schema, Seq("url", "url_hash"))
+    val iSurv = in.schema.fieldIndex("is_surv")
+    RowPass(in, out.schema) { rows =>
+      val write = out.writer()
+      val newGroup = key.tracker()
+      val ext = new GenericInternalRow(1)
+      var first: InternalRow = null
+      var vetted = 0
+      def pick(): Iterator[InternalRow] =
+        if (first == null) Iterator.empty
+        else {
+          ext.setInt(0, vetted)
+          val o = write(first, ext)
+          first = null; vetted = 0
+          Iterator.single(o)
+        }
+      rows.flatMap { r =>
+        val prev = if (newGroup(r)) pick() else Iterator.empty
+        if (first == null) first = r.copy()
+        vetted = math.max(vetted, r.getInt(iSurv))
+        prev
+      } ++ pick()
+    }
   }
 
   /** Geometric rank-tier assignment (appended as `chunk`): tier k covers

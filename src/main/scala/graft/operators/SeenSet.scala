@@ -1,11 +1,14 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.plans.SnapshotTable
+import graft.plans.{RowPass, SnapshotTable}
 import graft.util.{CuckooChain, ShardState}
 
 /** URL-seen set (SURVEY §2.3 J4, §2.9; north rule's bloom/cuckoo pipeline).
@@ -280,7 +283,7 @@ object SeenSet {
   private[graft] def releaseCheckpoints(ds: DataFrame): Unit =
     ds.queryExecution.logical.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed =>
-        r.rdd.unpersist(blocking = false)
+        GraftBridge.releaseBlocks(r.rdd)
       case _ =>
     }
 
@@ -320,8 +323,7 @@ object SeenSet {
     */
   private def blobsBefore(spark: SparkSession, shardTable: SnapshotTable,
                           waveExclusive: Int, wanted: () => Set[Int],
-                          pruneBytes: Long): (Dataset[ShardBlob], Int) = {
-    import spark.implicits._
+                          pruneBytes: Long): (DataFrame, Int) = {
     val v = shardTable.latestVersionBefore(waveExclusive)
     val dirs =
       if (shardTable.isEmptyAt(v)) Nil
@@ -331,28 +333,41 @@ object SeenSet {
     // no dirs still plans a (file-less) parquet scan, never an empty local
     // relation the optimizer would prune: every wave then runs one plan
     // shape, and so one set of generated classes
-    (spark.read.schema(org.apache.spark.sql.Encoders.product[ShardBlob].schema)
-      .parquet(dirs: _*).as[ShardBlob], dirs.size)
+    (if (dirs.isEmpty) GraftBridge.emptyParquet(spark, BlobSchema)
+      else spark.read.schema(BlobSchema).parquet(dirs: _*), dirs.size)
   }
+
+  // `shard` nullable like the frontier's shard column, so the two sharded
+  // writes of a wave share their partition-path class
+  private val BlobSchema = StructType(Seq(
+    StructField("shard", IntegerType), StructField("blob", BinaryType)))
 
   /** A shard-ordered stream of (shard, key, blob) rows: per shard, its
     * prior `blobs` (key = null, so they sort first) and then its `keys`
     * (`shard: int`, `h: long`) in ascending order. This is the one confirm-
     * tier exchange: a codegen hash exchange of narrow UnsafeRows plus an
     * in-partition sort, shared by the probe ([[cuckooFlagged]]) and the
-    * insert ([[cuckooInsert]]) so the two compile the same classes — the
-    * typed `groupByKey.cogroup` forms they replace each grouped wide
-    * objects outside codegen. Deterministic under task retry: the exchange
-    * keys and the sort are value-derived.
+    * insert ([[cuckooInsert]]) so the two compile the same classes; each
+    * folds the stream with a hand-written pass over its rows
+    * ([[graft.plans.RowPass]]), so neither compiles an encoder.
+    * Deterministic under task retry: the exchange keys and the sort are
+    * value-derived.
     */
-  private def shardStream(spark: SparkSession, keys: DataFrame,
-                          blobs: Dataset[ShardBlob]): Dataset[(Int, java.lang.Long, Array[Byte])] = {
-    import spark.implicits._
+  private def shardStream(keys: DataFrame, blobs: DataFrame): DataFrame =
     keys.select(col("shard"), col("h"), lit(null).cast("binary").as("blob"))
-      .unionByName(blobs.toDF().select(col("shard"), lit(null).cast("long").as("h"), col("blob")))
+      .unionByName(blobs.select(col("shard"), lit(null).cast("long").as("h"), col("blob")))
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "h")
-      .as[(Int, java.lang.Long, Array[Byte])]
+
+  private val VerdictSchema = StructType(Seq(
+    StructField("url_hash", LongType, nullable = true),
+    StructField("is_seen", BooleanType, nullable = false)))
+  /** The probe's sentinel verdict, a null key (see [[cuckooFlagged]]). */
+  private val NullVerdict: InternalRow = {
+    val w = new UnsafeRowWriter(2)
+    w.reset(); w.zeroOutNullBytes()
+    w.setNullAt(0); w.write(1, false)
+    w.getRow
   }
 
   /** Tier 3, flag form: every candidate row returned with `is_seen`.
@@ -379,7 +394,6 @@ object SeenSet {
                     pruneBytes: Long = DefaultPruneBytes,
                     requireExact: Boolean = false,
                     suspect: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import spark.implicits._
     val keys0 = candidates.filter(suspect).select(
       pmod(col("url_hash"), lit(shards)).cast("int").as("shard"), col("url_hash").as("h"))
     // when pruning will run its distinct-shards job, checkpoint the suspect
@@ -393,17 +407,30 @@ object SeenSet {
     val (blobs, _) = blobsBefore(spark, shardTable, asOfWaveExclusive,
       () => keys.select("shard").distinct().collect().map(_.getInt(0)).toSet,
       pruneBytes)
-    val verdicts = shardStream(spark, keys, blobs)
-      .mapPartitions { rows =>
+    // one verdict per suspect hash, materialized by its own job: the
+    // caller's plan then holds a row scan of the verdicts in place of the
+    // probe's stages. Plus a null-key row, joined null-safe: it matches no
+    // candidate (every url_hash is non-null) and, unlike a plain equi-join
+    // key, is not filtered out by inferred not-null constraints — so the
+    // build side is never empty, adaptive execution never drops the join,
+    // and every wave plans (and generates classes for) the same join,
+    // suspects or none. The checkpoint's exact size lets the planner
+    // broadcast the verdicts when they are small, so the candidates do not
+    // shuffle for the flag.
+    val verdicts = RowPass.checkpoint(shardStream(keys, blobs), VerdictSchema,
+        extra = Seq(NullVerdict)) { rows =>
         // a shard owns one base + up to compactThreshold delta blobs
         // (LSM layout, see cuckooInsert); seen = any blob contains it
+        val w = new UnsafeRowWriter(2)
         var shard = Int.MinValue
         var states: List[ShardState.Blob] = Nil
-        var last: java.lang.Long = null
-        rows.flatMap { case (sh, h, blob) =>
-          if (sh != shard) { shard = sh; states = Nil; last = null }
-          if (h == null) {
-            val st = ShardState.deserialize(blob)
+        var last = 0L
+        var any = false
+        rows.flatMap { r =>
+          val sh = r.getInt(0)
+          if (sh != shard) { shard = sh; states = Nil; any = false }
+          if (r.isNullAt(1)) {
+            val st = ShardState.deserialize(r.getBinary(2))
             if (requireExact && st.isInstanceOf[ShardState.Base])
               throw new IllegalStateException(
                 s"shard $sh holds an approximate (cuckoo) base blob — this " +
@@ -412,27 +439,23 @@ object SeenSet {
                   "never-seen url); continue with BloomCuckoo or start a fresh store")
             states ::= st
             Iterator.empty
-          } else if (h == last) Iterator.empty
-          else { last = h; Iterator.single((h.longValue, states.exists(_.contains(h)))) }
+          } else {
+            val h = r.getLong(1)
+            if (any && h == last) Iterator.empty
+            else {
+              last = h; any = true
+              w.reset(); w.zeroOutNullBytes()
+              w.write(0, h); w.write(1, states.exists(_.contains(h)))
+              Iterator.single(w.getRow)
+            }
+          }
         }
       }
-      // one verdict per suspect hash, materialized by its own job: the
-      // caller's plan then holds a row scan of the verdicts in place of the
-      // probe's stages
-      .toDF("url_hash", "is_seen").localCheckpoint()
     // the keys checkpoint is read only by the verdicts job and the shard set
     if (willPrune) releaseCheckpoints(keys)
-    // plus a null-key row, joined null-safe: it matches no candidate (every
-    // url_hash is non-null) and, unlike a plain equi-join key, is not
-    // filtered out by inferred not-null constraints — so the build side is
-    // never empty, adaptive execution never drops the join, and every wave
-    // plans (and generates classes for) the same join, suspects or none
-    val withSentinel = verdicts.unionByName(spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(null, false)), verdicts.schema
-        .map(_.copy(nullable = true)).foldLeft(new org.apache.spark.sql.types.StructType())(_ add _)))
-      .withColumnRenamed("url_hash", "v_hash")
+    val vs = verdicts.withColumnRenamed("url_hash", "v_hash")
     candidates
-      .join(withSentinel, candidates("url_hash") <=> withSentinel("v_hash"), "left")
+      .join(vs, candidates("url_hash") <=> vs("v_hash"), "left")
       .select((candidates.columns.map(candidates(_)) :+
         coalesce(col("is_seen"), lit(false)).as("is_seen")): _*)
   }
@@ -482,7 +505,6 @@ object SeenSet {
                    wave: Int, pruneBytes: Long = DefaultPruneBytes,
                    compactThreshold: Int = DefaultCompactThreshold,
                    exactBase: Boolean = false): Unit = {
-    import spark.implicits._
     // base = state strictly before this wave: a replayed insert after a
     // mid-wave crash merges into the same pre-crash base (idempotent commit)
     // instead of double-inserting into the crashed attempt's blobs. The
@@ -500,27 +522,33 @@ object SeenSet {
       pruneBytes = 0L)
     val keys = newHashes.toDF("h")
       .select(pmod(col("h"), lit(shards.toLong)).cast("int").as("shard"), col("h"))
-    val merged: Dataset[ShardBlob] = shardStream(spark, keys, blobs).mapPartitions { rows =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[ShardBlob]
+    // one row per shard in shard order, so the sharded write adds no sort
+    val merged = RowPass(shardStream(keys, blobs), BlobSchema, sortedBy = Seq("shard")) { rows =>
+      val w = new UnsafeRowWriter(2)
       val prior = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       val ins = new scala.collection.mutable.ArrayBuilder.ofLong
       var cur = Int.MinValue
-      def flush(): Unit = if (cur != Int.MinValue) {
-        out += foldShard(cur, prior.toSeq, ins.result(), perShardCapacity, exactBase)
-        prior.clear(); ins.clear()
-      }
-      rows.foreach { case (sh, h, blob) =>
-        if (sh != cur) { flush(); cur = sh }
-        if (h == null) prior += blob else ins += h.longValue
-      }
-      flush()
-      out.iterator
+      def flush(): Iterator[InternalRow] =
+        if (cur == Int.MinValue) Iterator.empty
+        else {
+          val b = foldShard(cur, prior.toSeq, ins.result(), perShardCapacity, exactBase)
+          prior.clear(); ins.clear()
+          w.reset(); w.zeroOutNullBytes()
+          w.write(0, b.shard); w.write(1, b.blob)
+          Iterator.single(w.getRow)
+        }
+      rows.flatMap { r =>
+        val sh = r.getInt(0)
+        val done = if (sh != cur) { val o = flush(); cur = sh; o } else Iterator.empty
+        if (r.isNullAt(1)) prior += r.getBinary(2) else ins += r.getLong(1)
+        done
+      } ++ flush()
     }
     // `blobs_read` rides the manifest: the cluster-portable record of the
     // pruned-I/O invariant (a pure delta wave reads 0 prior blobs, a
     // compaction wave reads only its compacting shards' blobs) — asserted
     // from the store itself in SeenSetShardSpec, no JVM statics involved
-    shardTable.commitSharded(merged.toDF(), "shard", wave,
+    shardTable.commitSharded(merged, "shard", wave,
       compactedShards = compactIds,
       metaKv = Map("blobs_read" -> blobsRead.toString,
         "compacted_shards" -> compactIds.size.toString))

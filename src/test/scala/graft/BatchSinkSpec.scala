@@ -10,7 +10,7 @@ import graft.operators.BatchSink
 import graft.util.Retry
 
 /** Reference-format artifact tree (S5-S11) + retry policies (X18). */
-class BatchSinkSpec extends AnyFunSuite {
+class BatchSinkSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
 
@@ -31,7 +31,7 @@ class BatchSinkSpec extends AnyFunSuite {
   }
 
   test("writes the reference artifact tree per batch") {
-    val out = Files.createTempDirectory("graft-batch-out").toString
+    val out = tempDir("batch-out")
     val dirs = BatchSink.writeBatchOutputs(spark, questions, out)
     assert(dirs.nonEmpty)
     dirs.foreach { d =>
@@ -71,7 +71,7 @@ class BatchSinkSpec extends AnyFunSuite {
     val q2 = questions.withColumn("diagrams",
       when(col("qtype") === "theory",
         expr("array()").cast("array<string>")).otherwise(col("diagrams")))
-    val out = Files.createTempDirectory("graft-meta-fmt").toString
+    val out = tempDir("meta-fmt")
     val dirs = BatchSink.writeBatchOutputs(spark, q2, out)
     val name = Paths.get(dirs.head).getFileName.toString
     val raw = new String(Files.readAllBytes(
@@ -91,7 +91,7 @@ class BatchSinkSpec extends AnyFunSuite {
   }
 
   test("raw Scrapy feeds (S5/S6 literal): temp json/csv written, json scans back") {
-    val out = Files.createTempDirectory("graft-rawfeed").toString
+    val out = tempDir("rawfeed")
     val feeds = BatchSink.writeRawFeeds(spark, questions, out)
     assert(feeds.nonEmpty)
     feeds.foreach { case (j, c) =>
@@ -134,7 +134,7 @@ class BatchSinkSpec extends AnyFunSuite {
         col("q.section"), col("q.qtype"), col("q.number"), col("q.question"),
         col("q.options"), col("q.subparts"), col("q.diagrams"),
         col("q.answer"), col("q.solution"), col("q.answer_after_solution"))
-    val out = Files.createTempDirectory("graft-f9-order").toString
+    val out = tempDir("f9-order")
     val Seq((jsonP, _)) = BatchSink.writeRawFeeds(spark, q, out)
     val feed = new String(Files.readAllBytes(Paths.get(jsonP)), StandardCharsets.UTF_8)
     assert(feed.indexOf("\"solution\"") >= 0 && feed.indexOf("\"answer\"") >= 0)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +11,13 @@ import graft.sources.PagesGen
   * partition-count invariance, resume-equivalence, lineage reconciliation,
   * strategy equivalence (exact vs bloom+exact vs bloom+cuckoo).
   */
-class CrawlEngineSpec extends AnyFunSuite {
+class CrawlEngineSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
   private val sf = "/root/testdata/sf0.001"
 
   private def freshStore(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(tag)
 
   // one reference run, reused by several asserts
   private lazy val store = freshStore("crawl")
@@ -319,6 +317,21 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(r.seenDigest == result.seenDigest && r.fetched == result.fetched &&
       r.deduped == result.deduped)
     assert(CrawlEngine.traceDigest(spark, s) == CrawlEngine.traceDigest(spark, store))
+  }
+
+  test("repeat crawl: every wave >= 1 compiles at most 2 generated classes " +
+       "(a wave's generated code fits Spark's default codegen cache)") {
+    // shard counts no other test uses: they are literals in the wave's
+    // plans, so the first crawl starts with none of its classes cached
+    val cfg = CrawlEngine.Config(cuckooShards = 5, frontierShards = 7)
+    CrawlEngine.run(spark, sf, freshStore("gate-warm"), cfg)
+    val s = freshStore("gate")
+    val r = CrawlEngine.run(spark, sf, s, cfg)
+    // wave w publishes frontier version w + 1 with its codegen_compiles
+    val frontier = new graft.plans.SnapshotTable(spark, s, "frontier")
+    val compiles = (2 to r.waves).map(v => v - 1 -> frontier.metaAt(v)("codegen_compiles").toLong)
+    assert(compiles.size >= 2, s"expected a multi-wave crawl, got ${r.waves} waves")
+    assert(compiles.forall(_._2 <= 2), s"(wave, compiles): $compiles")
   }
 
   test("questions were extracted during the crawl") {

@@ -12,7 +12,7 @@ import graft.util.Json
 /** The J2 artifact round-trip (update_all_metadata.py) and the documented
   * DataEnrichmentService file write-backs (docs/API_REFERENCE.md:225-286).
   */
-class EnrichmentSpec extends AnyFunSuite {
+class EnrichmentSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
 
@@ -33,7 +33,7 @@ class EnrichmentSpec extends AnyFunSuite {
   }
 
   private def writeTree(): String = {
-    val out = Files.createTempDirectory("graft-enrich").toString
+    val out = tempDir("enrich")
     BatchSink.writeBatchOutputs(spark, questions, out)
     out
   }
@@ -177,7 +177,7 @@ class EnrichmentSpec extends AnyFunSuite {
   }
 
   test("workflow reports enriched=false when no batch artifacts exist (ADVICE r02)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-noart").toString
+    val tmp = tempDir("noart")
     val item = ScreenshotWorkflow.Item("ghost", 1999, "https://kuulchat.com/x/ghost_1999/")
     val r = ScreenshotWorkflow.processUrl(item, tmp)
     assert(r.ok && r.upload_ok, "capture/upload still succeed")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +14,13 @@ import graft.plans.SnapshotTable
   * O(touched) bytes, and still produces byte-identical results, digests,
   * and per-wave lineage counts vs the always-read-everything engine.
   */
-class FrontierSpec extends AnyFunSuite {
+class FrontierSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
   private val sf = "/root/testdata/sf0.001"
 
   private def freshStore(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(tag)
 
   test("publishSharded drops exactly the given dirs and carries the rest " +
        "verbatim (the manifest-level deferred mass)") {

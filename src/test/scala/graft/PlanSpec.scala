@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * joins for dims, TakeOrdered for sort+limit, partial aggregation, and
   * whole-stage codegen on the hot relational paths.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
   private val sf = "/root/testdata/sf0.01"
@@ -61,7 +61,7 @@ class PlanSpec extends AnyFunSuite {
   test("bucketed fetch join: pages side has zero exchange and zero sort") {
     import graft.plans.BucketedTable
     import graft.sources.PagesGen
-    val store = java.nio.file.Files.createTempDirectory("graft-bucket-plan").toString
+    val store = tempDir("bucket-plan")
     val pagesDf = PagesGen.pages(spark, "/root/testdata/sf0.001").toDF()
     BucketedTable.write(pagesDf, s"$store/pages_bucketed", "graft_pages_plan_stage",
       "url", 8)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +13,12 @@ import graft.plans.SnapshotTable
   * the blob-count threshold, probes read only the shards the wave can touch
   * once pruning engages, and an under-sized shard grows gracefully.
   */
-class SeenSetShardSpec extends AnyFunSuite {
+class SeenSetShardSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
 
   private def freshTable(tag: String): SnapshotTable =
-    new SnapshotTable(spark, Files.createTempDirectory(s"graft-$tag").toString,
+    new SnapshotTable(spark, tempDir(tag),
       "seen_cuckoo")
 
   private val Shards = 8
@@ -317,7 +315,7 @@ class SeenSetShardSpec extends AnyFunSuite {
   }
 
   test("bloom snapshot: unknown magic is a clean incompatibility error (ADVICE r03)") {
-    val dir = Files.createTempDirectory("graft-bloommagic").toString
+    val dir = tempDir("bloommagic")
     // round-trip sanity first
     val b = new SeenSet.Bloom(1000, 0.01)
     b.inserted = 7

@@ -11,7 +11,7 @@ import graft.streaming.{EventStream, LineageStream}
   * windows + watermark, mapGroupsWithState custom state, and the live
   * lineage sink over a real crawl store.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession.get
   private val sf = "/root/testdata/sf0.001"
@@ -20,7 +20,7 @@ class StreamingSpec extends AnyFunSuite {
     * events parquet into one.
     */
   private lazy val eventsDir: String = {
-    val d = Files.createTempDirectory("graft-events-src")
+    val d = java.nio.file.Paths.get(tempDir("events-src"))
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       d.resolve("events.parquet"))
     d.toString
@@ -53,7 +53,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("lineage stream tails a crawl store's fetchlog") {
-    val store = Files.createTempDirectory("graft-stream-crawl").toString
+    val store = tempDir("stream-crawl")
     CrawlEngine.run(spark, sf, store, CrawlEngine.Config(maxWaves = 3))
     val q = LineageStream.start(spark, store)
     q.processAllAvailable(); q.stop()
